@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Timing notes:
   *  - `queryExecution.toRdd.count()` forces materialization of every output
@@ -143,19 +145,17 @@ object Bench {
     // readable; absent → no re-runs (first run of a round).
     val soloRuns: Seq[(String, Double)] = {
       val base = try {
-        val dir = java.nio.file.Paths.get("tools")
-        val cands = java.nio.file.Files.list(dir).iterator()
         val re = "bench_baseline_r(\\d+)\\.json".r
-        var bestN = -1; var bestP: java.nio.file.Path = null
-        while (cands.hasNext) {
-          val p = cands.next()
-          p.getFileName.toString match {
-            case re(n) if n.toInt > bestN => bestN = n.toInt; bestP = p
-            case _ =>
-          }
+        val latest = scala.util.Using.resource(
+            java.nio.file.Files.list(java.nio.file.Paths.get("tools"))) { ps =>
+          ps.iterator().asScala.flatMap { p =>
+            p.getFileName.toString match {
+              case re(n) => Some(n.toInt -> p)
+              case _ => None
+            }
+          }.maxByOption(_._1).map(_._2)
         }
-        if (bestP == null) Map.empty[String, Double]
-        else {
+        latest.fold(Map.empty[String, Double]) { bestP =>
           val txt = java.nio.file.Files.readString(bestP)
           // minimal parse of the flat "queries" map — no JSON dep
           val qre = "\"(q[0-9]+[a-z0-9_]*)\":([0-9.]+)".r

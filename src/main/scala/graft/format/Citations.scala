@@ -1,7 +1,7 @@
 package graft.format
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 import graft.model.Citation
 
@@ -12,8 +12,9 @@ import graft.model.Citation
  * and (PDFs only) the set of pages coalesced into consecutive ranges;
  * order citations by per-file min score ascending.
  *
- * Expressed as a DataFrame aggregation so it scales past the collected
- * result set, even though the reference only ever feeds it ≤ k rows.
+ * A fold on the driver: its input is a search's ≤ k hits, which the
+ * caller holds on the driver already, so a Spark aggregation would only
+ * add jobs.
  */
 object Citations {
 
@@ -34,37 +35,42 @@ object Citations {
   }
   private def fmt(s: Int, e: Int): String = if (s == e) s.toString else s"$s-$e"
 
-  private val coalesceRangesUdf = udf((pages: Seq[Int]) => coalesceRanges(pages))
-
   /** A2: `"lo-hi"` (4dp) or the single value when equal (`utilities.py:59-61`). */
   def scoreRange(lo: Double, hi: Double): String =
     if (lo == hi) f"$lo%.4f" else f"$lo%.4f-$hi%.4f"
 
-  /** Aggregate search hits `(metadata STRUCT, similarity_score)` into
-    * citation rows ordered by ascending min score (A4). */
-  def citationsDf(hits: DataFrame): DataFrame =
-    hits.groupBy(col("metadata.file_path").as("file_path"))
-      .agg(
-        first(col("metadata.file_name")).as("file_name"),
-        first(col("metadata.file_type")).as("file_type"),
-        min(col("similarity_score")).as("min_score"),
-        max(col("similarity_score")).as("max_score"),
-        sort_array(collect_set(when(col("metadata.file_type") === ".pdf",
-          col("metadata.page_number")))).as("page_set"))
-      .select(col("file_name"), col("file_path"), col("file_type"),
-        col("min_score"), col("max_score"),
-        when(col("file_type") === ".pdf", coalesceRangesUdf(col("page_set")))
-          .otherwise(lit("")).as("pages"))
-      .orderBy(col("min_score"), col("file_path"))
-
+  /** Citations of search hits carrying `metadata` (STRUCT) and
+    * `similarity_score` columns: collects them, then [[fold]]s. */
   def citations(hits: DataFrame): Seq[Citation] =
-    citationsDf(hits).collect().toIndexedSeq.map { (r: Row) =>
-      Citation(
-        file_name = r.getAs[String]("file_name"),
-        file_path = r.getAs[String]("file_path"),
-        file_type = r.getAs[String]("file_type"),
-        score_range = scoreRange(r.getAs[Double]("min_score"), r.getAs[Double]("max_score")),
-        pages = r.getAs[String]("pages"),
-        min_score = r.getAs[Double]("min_score"))
-    }
+    fold(hits.select(col("metadata"), col("similarity_score")).collect().toIndexedSeq
+      .map(r => r.getStruct(0) -> r.getDouble(1)))
+
+  /** Citation rows of `(metadata, similarity_score)` hits, ordered by
+    * ascending min score, then file path (A4). Name and type come from a
+    * file's first hit; pages are kept for `.pdf` files only. */
+  def fold(hits: Seq[(Row, Double)]): Seq[Citation] =
+    hits.groupBy { case (m, _) => Option(m.getAs[String]("file_path")) }.toSeq
+      .map { case (path, group) =>
+        val first = group.head._1
+        val fileType = first.getAs[String]("file_type")
+        val scores = group.map(_._2)
+        val pages =
+          if (fileType != ".pdf") ""
+          else coalesceRanges(group.map(_._1).flatMap { m =>
+            val i = m.fieldIndex("page_number")
+            if (m.isNullAt(i)) None else Some(m.getInt(i))
+          })
+        Citation(
+          file_name = first.getAs[String]("file_name"),
+          file_path = path.orNull,
+          file_type = fileType,
+          score_range = scoreRange(scores.min, scores.max),
+          pages = pages,
+          min_score = scores.min)
+      }
+      .sortWith { (a, b) =>
+        a.min_score < b.min_score ||
+          (a.min_score == b.min_score && Option(a.file_path).getOrElse("") <
+            Option(b.file_path).getOrElse(""))
+      }
 }

@@ -2,8 +2,11 @@ package graft.query
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.embed.{Embedder, HashEmbedder}
 import graft.expr.TextNorm
@@ -18,12 +21,15 @@ import graft.store.VectorStore
  * table (O15/K1: column-pruned `(id, vector)` scan fused with the cosine
  * expression, planned as `TakeOrderedAndProject` — per-partition heaps, no
  * global sort) → similarity threshold AFTER top-k (F5, §4.1 contract) →
- * broadcast id-lookup join back for text+metadata (J1) → post-top-k
- * search-term (F6) and document-type (F7) filters → score fields injected
- * (O14).
+ * `id IN (...)` lookup of text+metadata (J1) with the post-top-k
+ * search-term (F6) and document-type (F7) filters in the same scan →
+ * score fields injected on the driver (O14).
  *
- * One job; the only exchange is the k-row top-k merge onto the driver side
- * of the broadcast join — the shape that survives a 1000-executor scan.
+ * [[search]] runs three jobs: the parquet schema read of the vectors
+ * table, the top-k scan and the pushed id lookup. Both scans land ≤ k rows
+ * on the driver, which joins them, clips and orders there and returns a
+ * local relation — collecting it runs no further job, and nothing on the
+ * driver scales with the table.
  */
 final class Searcher(spark: SparkSession, store: VectorStore) {
 
@@ -54,54 +60,36 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
    * and lands ≤ k rows on the driver. Empty after threshold → return
    * without a lookup job (§4.1.2 short-circuit). Phase 2 re-reads only
    * `(id, text, metadata)` with an `id IN (...)` predicate pushed into
-   * parquet: the vectors table is written range-partitioned and sorted by
-   * id, so row-group min/max stats reduce the lookup to point reads — a
-   * broadcast join here would rescan the full text+metadata columns.
+   * parquet and the post-top-k filters applied in the same scan: the
+   * vectors table is written range-partitioned and sorted by id, so
+   * row-group min/max stats reduce the lookup to point reads. Its ≤ k rows
+   * join the phase-1 sims in a driver map; the clip, `distance` and the
+   * `(similarity_score desc, id)` order are computed there and returned as
+   * a local relation.
    */
   def search(db: String, query: String, p: Searcher.Params = Searcher.Params()): DataFrame = {
     // O5 + O6 + O13 on the driver; the query vector ships as a literal, so
     // the executor-side scan needs no broadcast variable at all
-    val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(query)) { fam =>
-      graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-        TextNorm.normalizeQuery(query))
-    }
-    val qvec = p.embedder.embed(prompted)
-
+    val qvec = embedQuery(query, p)
     val vectors = vectorsOf(db)
-    val topk = vectors
-      .select(col("id"), cosine_similarity(col("vector"), typedLit(qvec)).as("sim"))
-      .orderBy(col("sim").desc, col("id")) // deterministic tie-break (SURVEY §7.4.4)
-      .limit(p.k)
-      .filter(col("sim") >= p.threshold) // F5: threshold after top-k (§4.1)
+    val sims = topK(vectors, qvec, p).toMap
+    if (sims.isEmpty) return emptyHits(vectors) // §4.1.2: no lookup job
+
+    val hits = postFilter(vectors
+      .filter(col("id").isin(sims.keys.toSeq: _*)) // pushed to parquet stats
+      .select("id", "text", "metadata"), p)
       .collect()
-
-    val spark2 = spark
-    import spark2.implicits._
-    if (topk.isEmpty) // §4.1.2: no lookup job when nothing passes
-      return emptyHits(vectors)
-
-    val sims = topk.map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val simDf = sims.toDF("id", "sim")
-    val looked = vectors
-      .filter(col("id").isin(sims.map(_._1): _*)) // pushed to parquet stats
-      .select("id", "text", "metadata")
-      .join(broadcast(simDf), Seq("id"))
-
-    val termFiltered = p.searchTerm.filter(_.nonEmpty).fold(looked) { term =>
-      // F6: case-insensitive containment, post-top-k; (?i)+quote instead of
-      // contains(lower(..)) — see T2Queries q19 note on Spark 4 lower()
-      looked.filter(col("text").rlike("(?i)" + Pattern.quote(term)))
-    }
-    val typeFiltered = p.documentTypeFilter.filter(_.nonEmpty).fold(termFiltered) { v =>
-      termFiltered.filter(col("metadata.document_type") === v) // F7
-    }
-
-    typeFiltered
-      .withColumn("similarity_score",
-        least(greatest(col("sim"), lit(0.0)), lit(1.0))) // O14 clip
-      .withColumn("distance", lit(1.0) - col("sim"))
-      .drop("sim")
-      .orderBy(col("similarity_score").desc, col("id"))
+      .map { r =>
+        val sim = sims(r.getLong(0))
+        // O14: the score is clipped into [0, 1], the distance is not
+        Row(r.getLong(0), r.getString(1), r.getStruct(2),
+          math.min(1.0, math.max(0.0, sim)), 1.0 - sim)
+      }
+      .sortWith { (a, b) =>
+        a.getDouble(3) > b.getDouble(3) ||
+          (a.getDouble(3) == b.getDouble(3) && a.getLong(0) < b.getLong(0))
+      }
+    localHits(vectors, hits.toSeq)
   }
 
   /** Collected `(context, metadata)` pairs formatted as the reference's
@@ -129,14 +117,7 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
       p: Searcher.Params = Searcher.Params()): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    val qvecs = queries.map { case (qid, text) =>
-      val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(text)) { fam =>
-        graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-          TextNorm.normalizeQuery(text))
-      }
-      (qid, p.embedder.embed(prompted))
-    }
-    val qdf = qvecs.toDF("query_id", "qvec")
+    val qdf = embedMany(queries, p).toDF("query_id", "qvec")
     val vectors = vectorsOf(db)
     val scored = vectors.select(col("id"), col("vector"))
       .crossJoin(broadcast(qdf))
@@ -151,60 +132,57 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
       .orderBy(col("query_id"), col("similarity_score").desc, col("id"))
   }
 
-  /** Schema-correct empty result (the §4.1.2 short-circuit target). */
-  private def emptyHits(vectors: DataFrame): DataFrame = {
-    val hitSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
+  /** Driver-side hits `(id, text, metadata, similarity_score, distance)`
+    * as a local relation: collecting it runs no job. */
+  private def localHits(vectors: DataFrame, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("text", StringType),
       vectors.schema("metadata"),
-      org.apache.spark.sql.types.StructField("similarity_score",
-        org.apache.spark.sql.types.DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("distance",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hitSchema)
+      StructField("similarity_score", DoubleType, nullable = false),
+      StructField("distance", DoubleType, nullable = false))))
+
+  /** Schema-correct empty result (the §4.1.2 short-circuit target). */
+  private def emptyHits(vectors: DataFrame): DataFrame = localHits(vectors, Seq.empty)
+
+  /** F6/F7: the post-top-k search-term and document-type filters over
+    * looked-up `(text, metadata)` rows. F6 is case-insensitive containment
+    * via `(?i)`+quote instead of contains(lower(..)) — see T2Queries q19
+    * note on Spark 4 lower(). */
+  private def postFilter(hits: DataFrame, p: Searcher.Params): DataFrame = {
+    val byTerm = p.searchTerm.filter(_.nonEmpty).fold(hits) { term =>
+      hits.filter(col("text").rlike("(?i)" + Pattern.quote(term)))
+    }
+    p.documentTypeFilter.filter(_.nonEmpty).fold(byTerm) { v =>
+      byTerm.filter(col("metadata.document_type") === v)
+    }
   }
+
+  /** Score columns of a Spark-planned single-query path: clip `sim` into
+    * `similarity_score`, `distance = 1 - sim`, best first (O14). */
+  private def withScores(hits: DataFrame): DataFrame =
+    hits.withColumn("similarity_score", least(greatest(col("sim"), lit(0.0)), lit(1.0)))
+      .withColumn("distance", lit(1.0) - col("sim"))
+      .drop("sim")
+      .orderBy(col("similarity_score").desc, col("id"))
 
   /** Approximate search over a clustered store
     * ([[graft.store.VectorStore.writeVectorsClustered]]): probes only the
     * query's LSH cell plus `probes` 1-bit-flip neighbors — Spark partition
     * pruning turns the probe list into a directory-level scan reduction.
-    * Same two-phase shape and post-top-k filter semantics as [[search]]. */
+    * Same two phases and post-top-k filter semantics as [[search]]; the
+    * lookup stays a Spark plan over the pruned cells. */
   def searchApprox(db: String, query: String, p: Searcher.Params = Searcher.Params(),
       nbits: Int = 4, seed: Long = 42L, probes: Int = 1): DataFrame = {
-    val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(query)) { fam =>
-      graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-        TextNorm.normalizeQuery(query))
-    }
-    val qvec = p.embedder.embed(prompted)
+    val qvec = embedQuery(query, p)
     val qBucket = graft.expr.SketchOps.lshBucket(
       new org.apache.spark.sql.catalyst.util.GenericArrayData(qvec), nbits, seed)
     val targets = qBucket +: (0 until math.min(probes, nbits)).map(b => qBucket ^ (1 << b))
 
     val vectors = vectorsOf(db)
-    val topk = vectors
-      .filter(col("bucket").isin(targets: _*)) // partition pruning
-      .select(col("id"), cosine_similarity(col("vector"), typedLit(qvec)).as("sim"))
-      .orderBy(col("sim").desc, col("id"))
-      .limit(p.k)
-      .filter(col("sim") >= p.threshold)
-      .collect()
-    if (topk.isEmpty) return emptyHits(vectors)
-
-    val spark2 = spark
-    import spark2.implicits._
-    val sims = topk.map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val simDf = sims.toDF("id", "sim")
-    vectors.filter(col("bucket").isin(targets: _*))
-      .filter(col("id").isin(sims.map(_._1): _*))
-      .select("id", "text", "metadata")
-      .join(broadcast(simDf), Seq("id"))
-      .withColumn("similarity_score", least(greatest(col("sim"), lit(0.0)), lit(1.0)))
-      .withColumn("distance", lit(1.0) - col("sim"))
-      .drop("sim")
-      .orderBy(col("similarity_score").desc, col("id"))
+    val cells = vectors.filter(col("bucket").isin(targets: _*)) // partition pruning
+    val sims = topK(cells, qvec, p)
+    if (sims.isEmpty) emptyHits(vectors) else plannedLookup(cells, sims, p)
   }
 
   /** Approximate search over an IVF store
@@ -213,38 +191,17 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
     * the `nprobe` best clusters — partition pruning again turns the probe
     * list into a directory-level scan reduction, but with data-adaptive
     * cells the same probe fraction buys more recall than sign-LSH. Same
-    * two-phase shape and post-top-k filter semantics as [[search]]. */
+    * two phases and post-top-k filter semantics as [[search]]; the lookup
+    * stays a Spark plan over the probed clusters. */
   def searchIvf(db: String, query: String, p: Searcher.Params = Searcher.Params(),
       nprobe: Int = 2): DataFrame = {
-    val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(query)) { fam =>
-      graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-        TextNorm.normalizeQuery(query))
-    }
-    val qvec = p.embedder.embed(prompted)
+    val qvec = embedQuery(query, p)
     val probes = graft.ops.Ivf.probeList(store.centroids(db), qvec, nprobe)
 
     val vectors = vectorsOf(db)
-    val topk = vectors
-      .filter(col("cluster").isin(probes: _*)) // partition pruning
-      .select(col("id"), cosine_similarity(col("vector"), typedLit(qvec)).as("sim"))
-      .orderBy(col("sim").desc, col("id"))
-      .limit(p.k)
-      .filter(col("sim") >= p.threshold)
-      .collect()
-    if (topk.isEmpty) return emptyHits(vectors)
-
-    val spark2 = spark
-    import spark2.implicits._
-    val sims = topk.map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val simDf = sims.toDF("id", "sim")
-    vectors.filter(col("cluster").isin(probes: _*))
-      .filter(col("id").isin(sims.map(_._1): _*))
-      .select("id", "text", "metadata")
-      .join(broadcast(simDf), Seq("id"))
-      .withColumn("similarity_score", least(greatest(col("sim"), lit(0.0)), lit(1.0)))
-      .withColumn("distance", lit(1.0) - col("sim"))
-      .drop("sim")
-      .orderBy(col("similarity_score").desc, col("id"))
+    val cells = vectors.filter(col("cluster").isin(probes: _*)) // partition pruning
+    val sims = topK(cells, qvec, p)
+    if (sims.isEmpty) emptyHits(vectors) else plannedLookup(cells, sims, p)
   }
 
   /** Batched [[searchHnsw]] — the `…Many` discipline for the graph
@@ -289,35 +246,21 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
     * stored layered graph, each hop a directory-pruned point read of
     * the frontier's adjacency buckets, then the k survivors join back
     * to the vectors table for text/metadata exactly like the other
-    * store paths. Cost is `hops × ef × M` adjacency rows — never a
-    * corpus scan; the accuracy trade lives in `ef`. */
+    * store paths, post-top-k filters included. Cost is `hops × ef × M`
+    * adjacency rows — never a corpus scan; the accuracy trade lives in
+    * `ef`. */
   def searchHnsw(db: String, query: String,
       p: Searcher.Params = Searcher.Params(), ef: Int = 50): DataFrame = {
-    val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(query)) { fam =>
-      graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-        TextNorm.normalizeQuery(query))
-    }
-    val qvec = p.embedder.embed(prompted)
+    val qvec = embedQuery(query, p)
     val (_, maxLevel, buckets) = store.hnswMeta(db)
     val vectors = vectorsOf(db)
-    val hits = graft.ops.Hnsw.search(store.hnswEdges(db), vectors,
+    val sims = graft.ops.Hnsw.search(store.hnswEdges(db), vectors,
         col("id"), col("vector"), qvec, p.k, maxLevel, ef,
         srcBuckets = buckets)
       .filter(col("sim") >= p.threshold)
       .collect()
-    if (hits.isEmpty) return emptyHits(vectors)
-    val spark2 = spark
-    import spark2.implicits._
-    val sims = hits.map(r => r.getLong(1) -> r.getDouble(2)).toSeq
-    val simDf = sims.toDF("id", "sim")
-    vectors.filter(col("id").isin(sims.map(_._1): _*))
-      .select("id", "text", "metadata")
-      .join(broadcast(simDf), Seq("id"))
-      .withColumn("similarity_score",
-        least(greatest(col("sim"), lit(0.0)), lit(1.0)))
-      .withColumn("distance", lit(1.0) - col("sim"))
-      .drop("sim")
-      .orderBy(col("similarity_score").desc, col("id"))
+      .map(r => r.getLong(1) -> r.getDouble(2)).toSeq
+    if (sims.isEmpty) emptyHits(vectors) else plannedLookup(vectors, sims, p)
   }
 
   /** Approximate search over an IVF-PQ store
@@ -330,14 +273,11 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
     * k rows — the classic PQ refine step), so `p.threshold` and the
     * returned `similarity_score` keep the exact-path semantics whatever
     * the embedding's norm. Accuracy trade lives entirely in WHICH k
-    * candidates the codes surface, never in their scores. */
+    * candidates the codes surface, never in their scores. The post-top-k
+    * filters apply to the refined k, as in [[search]]. */
   def searchPq(db: String, query: String, p: Searcher.Params = Searcher.Params(),
       nprobe: Int = 2): DataFrame = {
-    val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(query)) { fam =>
-      graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-        TextNorm.normalizeQuery(query))
-    }
-    val qvec = p.embedder.embed(prompted)
+    val qvec = embedQuery(query, p)
     val cents = store.centroids(db)
     val books = store.codebooks(db)
     val probes = graft.ops.Ivf.probeList(cents, qvec, nprobe)
@@ -357,15 +297,11 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
     if (candidates.isEmpty) return emptyHits(vectors)
 
     // exact refine: k rows, id-pushdown into the pruned partitions
-    vectors.filter(col("cluster").isin(probes: _*))
+    withScores(postFilter(vectors.filter(col("cluster").isin(probes: _*))
       .filter(col("id").isin(candidates: _*))
       .select(col("id"), col("text"), col("metadata"),
         cosine_similarity(col("vector"), typedLit(qvec)).as("sim"))
-      .filter(col("sim") >= p.threshold)
-      .withColumn("similarity_score", least(greatest(col("sim"), lit(0.0)), lit(1.0)))
-      .withColumn("distance", lit(1.0) - col("sim"))
-      .drop("sim")
-      .orderBy(col("similarity_score").desc, col("id"))
+      .filter(col("sim") >= p.threshold), p))
   }
 
   /** Approximate search over the quantized side table
@@ -376,15 +312,12 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
     * the top `rerank` candidates refine with exact cosine against their
     * stored vectors (id-pushdown read), keeping `p.threshold` and the
     * returned scores exact-path semantics, same contract as
-    * [[searchPq]]. */
+    * [[searchPq]]. The post-top-k filters apply after the refined top-k
+    * cut, so a filtered-out hit is never refilled from the candidates. */
   def searchQuantized(db: String, query: String,
       p: Searcher.Params = Searcher.Params(), mode: String = "sq8",
       rerank: Int = 50): DataFrame = {
-    val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(query)) { fam =>
-      graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-        TextNorm.normalizeQuery(query))
-    }
-    val qvec = p.embedder.embed(prompted)
+    val qvec = embedQuery(query, p)
     val quant = store.quantCodes(db)
     val ranked = mode match {
       case "sq8" =>
@@ -405,27 +338,48 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
     val candidates = ranked.limit(rerank).collect().map(_.getLong(0))
     val vectors = vectorsOf(db)
     if (candidates.isEmpty) return emptyHits(vectors)
-    vectors.filter(col("id").isin(candidates: _*))
+    postFilter(withScores(vectors.filter(col("id").isin(candidates: _*))
       .select(col("id"), col("text"), col("metadata"),
         cosine_similarity(col("vector"), typedLit(qvec)).as("sim"))
-      .filter(col("sim") >= p.threshold)
-      .withColumn("similarity_score", least(greatest(col("sim"), lit(0.0)), lit(1.0)))
-      .withColumn("distance", lit(1.0) - col("sim"))
-      .drop("sim")
-      .orderBy(col("similarity_score").desc, col("id"))
+      .filter(col("sim") >= p.threshold))
+      .limit(p.k), p)
+  }
+
+  /** Query vector of one query (prompt-prefix + normalize, O5/O6/O13). */
+  private def embedQuery(query: String, p: Searcher.Params): Array[Float] = {
+    val normalized = TextNorm.normalizeQuery(query)
+    p.embedder.embed(p.promptFamily.fold(normalized) { fam =>
+      graft.embed.PromptPrefix.applyTo(fam, isQuery = true, normalized)
+    })
+  }
+
+  /** Phase 1 of the single-query paths: the `(id, sim)` of the k best
+    * rows of `scan` (deterministic id tie-break, SURVEY §7.4.4), threshold
+    * AFTER the cut (F5, §4.1), landed on the driver. */
+  private def topK(scan: DataFrame, qvec: Array[Float],
+      p: Searcher.Params): Seq[(Long, Double)] =
+    scan.select(col("id"), cosine_similarity(col("vector"), typedLit(qvec)).as("sim"))
+      .orderBy(col("sim").desc, col("id"))
       .limit(p.k)
+      .filter(col("sim") >= p.threshold)
+      .collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+
+  /** Phase 2 of the Spark-planned approximate paths: the `id IN (...)`
+    * lookup of `scan`, post-filtered, joined to the phase-1 sims. */
+  private def plannedLookup(scan: DataFrame, sims: Seq[(Long, Double)],
+      p: Searcher.Params): DataFrame = {
+    val spark2 = spark
+    import spark2.implicits._
+    withScores(postFilter(scan.filter(col("id").isin(sims.map(_._1): _*))
+        .select("id", "text", "metadata"), p)
+      .join(broadcast(sims.toDF("id", "sim")), Seq("id")))
   }
 
   /** Embedded query vectors for a batch (prompt-prefix + normalize, O5/O6). */
   private def embedMany(queries: Seq[(String, String)],
       p: Searcher.Params): Seq[(String, Array[Float])] =
-    queries.map { case (qid, text) =>
-      val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(text)) { fam =>
-        graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-          TextNorm.normalizeQuery(text))
-      }
-      (qid, p.embedder.embed(prompted))
-    }
+    queries.map { case (qid, text) => (qid, embedQuery(text, p)) }
 
   /** Shared tail of the batched approximate searches: per-query bounded
     * top-k over the scored candidates, threshold AFTER top-k (§4.1), then
@@ -512,11 +466,7 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
   def searchHybrid(db: String, query: String,
       p: Searcher.Params = Searcher.Params(), candidates: Int = 50,
       k0: Int = 60): DataFrame = {
-    val prompted = p.promptFamily.fold(TextNorm.normalizeQuery(query)) { fam =>
-      graft.embed.PromptPrefix.applyTo(fam, isQuery = true,
-        TextNorm.normalizeQuery(query))
-    }
-    val qvec = p.embedder.embed(prompted)
+    val qvec = embedQuery(query, p)
     val terms = TextNorm.normalizeQuery(query).toLowerCase(java.util.Locale.ROOT)
       .split("\\s+").filter(_.nonEmpty).distinct.toSeq
 
@@ -545,22 +495,6 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
         col("similarity_score"), col("distance"), col("rrf").as("hybrid_score"))
       .orderBy(col("hybrid_score").desc, col("id"))
   }
-
-  /** S17 side files (`/root/reference/chat_llm.py:34-40`): write retrieved
-    * contexts (`"---"`-separated) and one metadata JSON per line. */
-  def writeSearchArtifacts(db: String, query: String, outDir: String,
-      p: Searcher.Params = Searcher.Params()): Unit = {
-    val hits = search(db, query, p)
-    val rows = hits.select(col("text"),
-      to_json(struct(col("metadata.*"), col("similarity_score"), col("distance")))
-        .as("meta_json")).collect()
-    val dir = java.nio.file.Paths.get(outDir)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(dir.resolve("contexts.txt"),
-      rows.map(_.getString(0)).mkString("", "\n\n---\n\n", "\n\n---\n\n"))
-    java.nio.file.Files.writeString(dir.resolve("metadata.txt"),
-      rows.map(_.getString(1)).mkString("", "\n", "\n"))
-  }
 }
 
 object Searcher {
@@ -574,4 +508,20 @@ object Searcher {
       documentTypeFilter: Option[String] = None,
       embedder: Embedder = HashEmbedder(),
       promptFamily: Option[String] = None)
+
+  /** S17 side files (`/root/reference/chat_llm.py:34-40`): the contexts of
+    * `hits` (`"---"`-separated) and one metadata JSON per line, in the
+    * order of `hits`. Meant for a collected, local hit relation, so the
+    * side files describe exactly the hits the caller already holds. */
+  def writeSearchArtifacts(hits: DataFrame, outDir: String): Unit = {
+    val rows = hits.select(col("text"),
+      to_json(struct(col("metadata.*"), col("similarity_score"), col("distance")))
+        .as("meta_json")).collect()
+    val dir = java.nio.file.Paths.get(outDir)
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.writeString(dir.resolve("contexts.txt"),
+      rows.map(_.getString(0)).mkString("", "\n\n---\n\n", "\n\n---\n\n"))
+    java.nio.file.Files.writeString(dir.resolve("metadata.txt"),
+      rows.map(_.getString(1)).mkString("", "\n", "\n"))
+  }
 }

@@ -1,6 +1,8 @@
 package graft.rag
 
-import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
 
 import graft.format.{Citations, ContextFormatter}
 import graft.model.Citation
@@ -9,8 +11,9 @@ import graft.query.Searcher
 /**
  * Full RAG chat turn (SURVEY §3.3, `ask_llm` path): search → side files →
  * prompt assembly → streaming completion → citation aggregation
- * (`/root/reference/chat_llm.py:30-51,116-164`). Everything except the
- * completion call is engine dataflow.
+ * (`/root/reference/chat_llm.py:30-51,116-164`). Retrieval is the only
+ * engine dataflow: its ≤ k hits are collected once, and the side files,
+ * contexts and citations are all computed from those rows on the driver.
  */
 object RagChat {
 
@@ -25,22 +28,19 @@ object RagChat {
       hybrid: Boolean = false): Answer = {
     // hybrid retrieval surfaces lexical matches (exact names/ids) the
     // embedding space alone can miss; hit schema is identical either way
-    val hits =
+    val planned =
       if (hybrid) searcher.searchHybrid(db, question, p)
         .select("id", "text", "metadata", "similarity_score", "distance")
       else searcher.search(db, question, p)
-    hits.cache()
-    try {
-      val rows = hits.select(col("text"), col("metadata.file_name")).collect()
-      val contexts = rows.map(r =>
-        ContextFormatter.cleanContext(r.getString(0))).toIndexedSeq
-      artifactsDir.foreach(d => searcher.writeSearchArtifacts(db, question, d, p))
+    val rows = planned.collect().toIndexedSeq
+    val contexts = rows.map(r => ContextFormatter.cleanContext(r.getAs[String]("text")))
+    artifactsDir.foreach(d => Searcher.writeSearchArtifacts(
+      planned.sparkSession.createDataFrame(rows.asJava, planned.schema), d))
 
-      val prompt = RagPrompt.assemble(question, contexts) // throws on empty (ref :43-44)
-      val answer = client.complete(RagPrompt.systemMessage, prompt, onToken)
-      val cits = Citations.citations(
-        hits.select(col("metadata"), col("similarity_score")))
-      Answer(answer, contexts, cits)
-    } finally hits.unpersist()
+    val prompt = RagPrompt.assemble(question, contexts) // throws on empty (ref :43-44)
+    val answer = client.complete(RagPrompt.systemMessage, prompt, onToken)
+    val cits = Citations.fold(rows.map(r =>
+      r.getAs[Row]("metadata") -> r.getAs[Double]("similarity_score")))
+    Answer(answer, contexts, cits)
   }
 }

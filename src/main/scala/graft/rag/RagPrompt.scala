@@ -4,10 +4,10 @@ package graft.rag
  * RAG prompt assembly (SURVEY §3.3), re-expressing
  * `assemble_rag_prompt_and_query` (`/root/reference/chat_llm.py:30-51`) with
  * the reference's system/rag strings (`/root/reference/constants.py:207-208`).
- * Driver-side string work — the dataflow part of RAG chat is the search +
- * citation aggregation, which live in [[graft.query.Searcher]] and
- * [[graft.format.Citations]]. The completion call itself is an external
- * HTTP boundary outside the engine (SURVEY §7.5).
+ * Driver-side string work — the dataflow part of RAG chat is the search
+ * in [[graft.query.Searcher]]; the citations of its hits fold on the
+ * driver in [[graft.format.Citations]]. The completion call itself is an
+ * external HTTP boundary outside the engine (SURVEY §7.5).
  */
 object RagPrompt {
 

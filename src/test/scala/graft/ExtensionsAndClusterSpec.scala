@@ -473,6 +473,38 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bHits.nonEmpty && bHits.length <= 5)
   }
 
+  test("IVF store: searchIvf applies the post-top-k term and type filters") {
+    val work = Files.createTempDirectory("graft-ivf-filter").toString
+    val store = new VectorStore(spark, s"$work/wh")
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val vectors = emb.select(
+      col("vec_id").as("id"),
+      col("embedding").as("vector"),
+      concat(lit("doc "), col("vec_id"),
+        when(col("vec_id") % 2 === 0, lit(" Even")).otherwise(lit(" odd"))).as("text"),
+      struct(lit("/x").as("file_path"), lit(".txt").as("file_type"),
+        lit("x.txt").as("file_name"), lit("t").as("creation_date"),
+        lit("t").as("modification_date"), lit("h").as("hash"),
+        lit("document").as("document_type"),
+        lit(null).cast("int").as("page_number")).as("metadata"))
+    store.writeVectorsIvf("ivff", vectors, nlist = 8, iters = 2)
+
+    val searcher = new Searcher(spark, store)
+    val p = Searcher.Params(k = 10, threshold = -1.0)
+    val all = searcher.searchIvf("ivff", "doc query text", p, nprobe = 2)
+      .select("id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(all.exists(_._2.endsWith("odd")) && all.exists(_._2.endsWith("Even")))
+    // case-insensitive containment over the same top-k: the even hits of
+    // the unfiltered result, never refilled from below
+    val even = searcher.searchIvf("ivff", "doc query text",
+      p.copy(searchTerm = Some("even")), nprobe = 2)
+      .select("id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(even.nonEmpty && even.forall(_._2.endsWith("Even")))
+    assert(even == all.filter(_._2.endsWith("Even")))
+    assert(searcher.searchIvf("ivff", "doc query text",
+      p.copy(documentTypeFilter = Some("image")), nprobe = 2).count() == 0)
+  }
+
   test("PQ store: codes-only candidate scan matches ivfPqTopK ranking") {
     val work = Files.createTempDirectory("graft-pq").toString
     val store = new VectorStore(spark, s"$work/wh")

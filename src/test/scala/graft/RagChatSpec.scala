@@ -9,6 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.format.ContextFormatter
 import graft.ingest.IngestJob
 import graft.query.Searcher
 import graft.rag.{OpenAiCompatibleClient, RagChat}
@@ -97,6 +98,29 @@ class RagChatSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ans = RagChat.ask(searcher, "ragdb", "how do engines shuffle data",
       Searcher.Params(k = 3, threshold = 0.0), client, hybrid = true)
     assert(ans.text.nonEmpty && ans.contexts.nonEmpty && ans.citations.nonEmpty)
+  }
+
+  test("hybrid turn: side files hold the turn's own contexts") {
+    val store = new VectorStore(spark, s"$work/wh")
+    val searcher = new Searcher(spark, store)
+    // no cosine passes a threshold of 1, so a plain search finds nothing;
+    // the hybrid turn still answers from its lexical-only hits
+    val p = Searcher.Params(k = 3, threshold = 1.0)
+    assert(searcher.search("ragdb", "how do engines shuffle data", p).count() == 0)
+    val dir = s"$work/hybrid-artifacts"
+    val ans = RagChat.ask(searcher, "ragdb", "how do engines shuffle data", p,
+      hybrid = true, artifactsDir = Some(dir))
+    assert(ans.contexts.nonEmpty)
+    val sep = "\n\n---\n\n"
+    val written = new String(Files.readAllBytes(Paths.get(dir, "contexts.txt")),
+      StandardCharsets.UTF_8)
+    assert(written.endsWith(sep))
+    assert(written.stripSuffix(sep).split(sep, -1).map(ContextFormatter.cleanContext)
+      .toSeq == ans.contexts)
+    val meta = new String(Files.readAllBytes(Paths.get(dir, "metadata.txt")),
+      StandardCharsets.UTF_8).linesIterator.toSeq
+    assert(meta.length == ans.contexts.length)
+    assert(meta.forall(_.contains("\"file_name\":\"engine.txt\"")))
   }
 
   test("empty contexts raise (reference contract)") {
