@@ -305,52 +305,29 @@ object Dedup {
     val fwd = pairs.select(aCol.cast("long").as("src"), bCol.cast("long").as("dst"))
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(eager = true)
-    var iter = 0
-    var done = false
-    // stats-reset round checkpoints: the halving self-join DOUBLES the
-    // carried sizeInBytes estimate every round (geometric digit growth
-    // — the graftshim.StatsReset compounding lesson)
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset.freshLocalCheckpoint _
-    val ckptN = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted _
-    // convergence via the monotone label sum (r15): labels only ever
-    // DECREASE (grouped min + least in the halving step), so Σlbl
-    // strictly drops iff any row changed — the sccondensation trick.
-    // The former per-round `next ⋈ labels` diff was a full shuffle
-    // join; since r16 the Σ rides each round checkpoint's own
-    // materialization job via observe — zero extra jobs per round.
-    // Decimal(38,0) so arbitrary Long ids cannot wrap.
+    // stats-reset round checkpoints ([[Rounds]]): the halving self-join
+    // DOUBLES the carried sizeInBytes estimate every round (geometric
+    // digit growth). Convergence via the monotone label sum (r15):
+    // labels only ever DECREASE (grouped min + least in the halving
+    // step), so Σlbl strictly drops iff any row changed, and the Σ
+    // rides each round's checkpoint job. Decimal(38,0) so arbitrary
+    // Long ids cannot wrap.
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val lblSumCol = coalesce(sum(col("lbl").cast(dec)),
-      lit(java.math.BigDecimal.ZERO).cast(dec)).as("s")
-    def observedSum(metrics: Map[String, org.apache.spark.sql.Row])
-        : java.math.BigDecimal =
-      metrics.getOrElse("__graft_lblsum",
-        throw new IllegalStateException("duplicateClusters: observed " +
-          "label-sum metric missing from checkpoint job")).getDecimal(0)
-    val (labels0, _, m0) = ckptN(edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("lbl", col("id"))
-      .observe("__graft_lblsum", lblSumCol))
-    var labels = labels0
-    var prevSum = observedSum(m0)
-    while (!done && iter < maxIters) {
-      val neigh = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), labels("lbl").as("lbl"))
+    val (labels, _) = Rounds.untilStable(
+        edges.select(col("src").as("id")).distinct().withColumn("lbl", col("id")),
+        maxIters,
+        Some(coalesce(sum(col("lbl").cast(dec)),
+          lit(java.math.BigDecimal.ZERO).cast(dec)))) { cur =>
+      val neigh = edges.join(cur, edges("dst") === cur("id"))
+        .select(edges("src").as("id"), cur("lbl").as("lbl"))
       // materialized before the self-join below — otherwise the halving
       // step would recompute the neighbor-min shuffle twice per round
-      val m1 = ckpt(labels.unionByName(neigh)
-        .groupBy("id").agg(min("lbl").as("lbl")))
+      val m1 = Rounds.checkpoint(cur.unionByName(neigh)
+        .groupBy("id").agg(min("lbl").as("lbl"))).frame
       // path halving: follow the label's own label one hop
-      val (next, _, mN) = ckptN(m1.join(m1.select(col("id").as("lbl"),
-          col("lbl").as("lbl2")), Seq("lbl"), "left")
+      m1.join(m1.select(col("id").as("lbl"), col("lbl").as("lbl2")),
+          Seq("lbl"), "left")
         .select(col("id"), least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl"))
-        .observe("__graft_lblsum", lblSumCol))
-      val s = observedSum(mN)
-      done = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      iter += 1
     }
     labels.select(col("id"), col("lbl").as("cluster_id"))
   }

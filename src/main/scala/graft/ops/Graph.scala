@@ -18,39 +18,15 @@ import org.apache.spark.sql.functions._
  * replays the iterations bit-for-bit.
  *
  * Scale shape (per iteration): one equi-join edges⋈ranks on `src` — the
- * big static edge frame is checkpointed once and keeps its partitioning;
- * only the |V|-sized rank frame moves — then one partial-agg-friendly
- * integer sum by `dst`. Each round `localCheckpoint`s eagerly so the
- * plan stays O(1) deep regardless of iteration count (the
- * [[Dedup.duplicateClusters]] discipline).
+ * big static edge frame is checkpointed once, so the upstream never
+ * re-runs, but with AQE on a checkpoint keeps no partitioning
+ * (MEASUREMENT.md #11) and each round's join exchanges both sides —
+ * then one partial-agg-friendly integer sum by `dst`. Each round
+ * checkpoints eagerly so the plan stays O(1) deep regardless of
+ * iteration count (the [[Dedup.duplicateClusters]] discipline); the
+ * iterative operators checkpoint through [[Rounds]].
  */
 object Graph {
-
-  /** CHECKPOINT `df` hash-clustered + sorted by `key`, with the
-    * physical properties stamped so per-round equi-joins on `key`
-    * skip the static side's exchange and sort (see
-    * `StatsReset.freshLocalCheckpointKeyed` — with AQE on, a plain
-    * localCheckpoint drops partitioning/ordering entirely, so without
-    * the stamp this prep never engages).
-    *
-    * MEASURED AND NOT ADOPTED on any query path (r16, two A/Bs, 3-rep
-    * medians at sf0.1): (a) with the count PINNED to
-    * spark.sql.shuffle.partitions, executor CPU inflated 2-5×
-    * family-wide (thousands of ~5 ms tasks for |V|≈2k frames); (b)
-    * with the count derived from the measured row count (~1M
-    * rows/partition → 1 locally), the frozen tiny layout SERIALIZED
-    * every co-partitioned join — q266 9.2→16.5 s, the iterative
-    * families 0.6-0.8× — because the other join side must collapse to
-    * the same single partition while AQE can no longer re-widen
-    * either side. Per-round AQE exchanges of a small static frame are
-    * simply cheaper than any frozen layout at bench scale; on a
-    * cluster where the static frame is terabytes the trade reverses,
-    * which is why the mechanism stays (tested in Wave14Spec) for an
-    * operator to opt into rather than wired into the ops. */
-  private[graft] def keyPartitionedCkpt(df: DataFrame, key: String)
-      : DataFrame =
-    org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointKeyed(df, key)._1
 
   /** Damped PageRank by `iters` power iterations in micro-units
     * (init 1.0 per node = 1,000,000).
@@ -122,20 +98,20 @@ object Graph {
       .union(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(eager = true)
     val base = (100L - dampingPct) * 1000000L / 100L
-    // stats-reset round checkpoints (graftshim.StatsReset): one join of
-    // the prior checkpoint per round grows carried sizeInBytes digits
+    // stats-reset round checkpoints ([[Rounds]]): one join of the
+    // prior checkpoint per round grows carried sizeInBytes digits
     // linearly — harmless at iters = 3, but user-supplied large iters
     // would still bloat the BigInt stats products (advisor, round 12)
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset.freshLocalCheckpoint _
     var ranks = nodes.select(col("id"), lit(1000000L).as("rank_micro"))
     for (_ <- 1 to iters) {
       val sums = ew.join(ranks, ew("src") === ranks("id"))
         .select(col("dst"), expr("rank_micro * w div sw").as("c"))
         .groupBy("dst").agg(sum("c").as("s"))
-      ranks = ckpt(nodes.join(sums, nodes("id") === sums("dst"), "left")
+      ranks = Rounds.checkpoint(nodes
+        .join(sums, nodes("id") === sums("dst"), "left")
         .select(nodes("id"),
           (lit(base) + expr(s"coalesce(s, cast(0 as bigint)) * $dampingPct div 100"))
-            .as("rank_micro")))
+            .as("rank_micro"))).frame
     }
     ranks
   }
@@ -155,32 +131,19 @@ object Graph {
     val raw = edges.select(srcCol.cast("long").as("a"),
         dstCol.cast("long").as("b"), weightCol.cast("long").as("w"))
       .filter(col("a") =!= col("b") && col("w") > 0)
-    // edge-count convergence rides each checkpoint's materialization
-    // job (r16) — the former per-round count() was a second job
-    // re-reading the blocks the checkpoint just wrote
-    val ckptN = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted _
-    val (e0, n0, _) = ckptN(raw
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"), col("w"))
-      .groupBy("a", "b").agg(sum("w").as("w")))
-    var e = e0
-    var prev = n0
-    var done = prev == 0L
-    var iters = 0
     def wdegrees(ed: DataFrame) = ed.select(col("a").as("id"), col("w"))
       .unionAll(ed.select(col("b").as("id"), col("w")))
       .groupBy("id").agg(sum("w").as("wdeg"))
-    while (!done && iters < maxIters) {
-      val keep = wdegrees(e).filter(col("wdeg") >= k).select(col("id"))
-      val (next, n, _) = ckptN(e
-        .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
+    // peel until no edge leaves: the edge count rides each round's
+    // checkpoint job (no per-round count() job)
+    val (e, _) = Rounds.untilStable(raw
+        .select(least(col("a"), col("b")).as("a"),
+          greatest(col("a"), col("b")).as("b"), col("w"))
+        .groupBy("a", "b").agg(sum("w").as("w")), maxIters) { cur =>
+      val keep = wdegrees(cur).filter(col("wdeg") >= k).select(col("id"))
+      cur.join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"), col("w")))
-      done = n == prev
-      e = next
-      prev = n
-      iters += 1
+        .select(col("a"), col("b"), col("w"))
     }
     wdegrees(e).filter(col("wdeg") >= k)
       .select(col("id"), col("wdeg").as("core_weight"))
@@ -196,8 +159,9 @@ object Graph {
     * first empty frontier or `maxDepth`, whichever is sooner.
     * Output: `(id, dist)` for every node within reach — sources at 0.
     *
-    * Scale shape: the adjacency is symmetrized + checkpointed ONCE and
-    * keeps its partitioning across rounds; per round one equi-join
+    * Scale shape: the adjacency is symmetrized + checkpointed ONCE (the
+    * checkpoint keeps no partitioning under AQE, so each round's join
+    * re-exchanges it — MEASUREMENT.md #11); per round one equi-join
     * (frontier ⋈ edges), one anti-join (novelty vs the visited set) —
     * both on node ids — and the visited/frontier frames checkpoint
     * O(1)-deep. The frontier-empty test rides the checkpoint
@@ -221,28 +185,25 @@ object Graph {
     // LogicalRDD scans pays more per-task overhead than the one
     // O(|visited|) scan-and-write job it saves). Reverted; q303-class
     // shallow BFS saw only ~0.5 s either way.
-    val ckptN = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted _
-    val (visited0, n0, _) = ckptN(sources
+    val start = Rounds.checkpoint(sources
       .select(sourceIdCol.cast("long").as("id"))
       .distinct()
       .select(col("id"), lit(0L).as("dist")))
-    var visited = visited0
+    var visited = start.frame
     var frontier = visited.select(col("id"))
     var depth = 0L
-    // the frontier-size convergence signal rides each checkpoint's own
-    // materialization job (r16) — the former per-round count() re-read
-    // the fresh blocks for a number the materialization already knew
-    var frontierSize = n0
+    // the frontier size rides each round's checkpoint job
+    var frontierSize = start.rows
     while (frontierSize > 0 && depth < maxDepth) {
       depth += 1
-      val (next, n, _) = ckptN(frontier.join(adj, col("id") === col("s"))
+      val next = Rounds.checkpoint(frontier.join(adj, col("id") === col("s"))
         .select(col("t").as("id")).distinct()
         .join(visited.select(col("id")), Seq("id"), "left_anti")
         .select(col("id"), lit(depth).as("dist")))
-      frontierSize = n
-      if (n > 0) visited = visited.unionAll(next).localCheckpoint(true)
-      frontier = next.select(col("id"))
+      frontierSize = next.rows
+      if (frontierSize > 0)
+        visited = visited.unionAll(next.frame).localCheckpoint(true)
+      frontier = next.frame.select(col("id"))
     }
     visited
   }
@@ -342,16 +303,15 @@ object Graph {
     val nodes = adj.select(col("s").as("id")).distinct()
       .join(seed, Seq("id"), "left")
       .localCheckpoint(true)
-    // stats-reset round checkpoints: each round joins the previous
-    // round's checkpoint ~3 times, compounding carried sizeInBytes
-    // geometrically (graftshim.StatsReset)
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset.freshLocalCheckpoint _
+    // stats-reset round checkpoints ([[Rounds]]): each round joins the
+    // previous round's checkpoint ~3 times, compounding carried
+    // sizeInBytes geometrically
     // the label frame CARRIES the static seed label (r16): the former
     // shape re-joined `nodes` every round just to recover seed_lbl —
     // one |V| equi-join per round gone; row set and clamp semantics
     // identical (lbl's id set IS nodes' id set, both static)
-    var lbl = ckpt(nodes.select(col("id"), col("seed_lbl"),
-      col("seed_lbl").as("lbl")))
+    var lbl = Rounds.checkpoint(nodes.select(col("id"), col("seed_lbl"),
+      col("seed_lbl").as("lbl"))).frame
     for (_ <- 1 to iters) {
       val votes = adj.join(
           lbl.filter(col("lbl").isNotNull)
@@ -365,10 +325,10 @@ object Graph {
       val winner = votes.groupBy("id")
         .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("wp"))
         .select(col("id"), col("wp.lbl").as("win"))
-      lbl = ckpt(lbl
+      lbl = Rounds.checkpoint(lbl
         .join(winner, Seq("id"), "left")
         .select(col("id"), col("seed_lbl"),
-          coalesce(col("seed_lbl"), col("win"), col("lbl")).as("lbl")))
+          coalesce(col("seed_lbl"), col("win"), col("lbl")).as("lbl"))).frame
     }
     lbl.filter(col("lbl").isNotNull).select(col("id"), col("lbl").as("label"))
   }
@@ -436,10 +396,9 @@ object Graph {
       .select(least(col("s"), col("t")).as("a"),
         greatest(col("s"), col("t")).as("b"))
       .distinct()
-    val (adj, nDirected, _) = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted(
-        raw.select(col("a").as("s"), col("b").as("t"))
-          .unionAll(raw.select(col("b").as("s"), col("a").as("t"))))
+    val Rounds.Checkpoint(adj, nDirected, _) = Rounds.checkpoint(
+      raw.select(col("a").as("s"), col("b").as("t"))
+        .unionAll(raw.select(col("b").as("s"), col("a").as("t"))))
     val m = nDirected / 2 // undirected simple edge count
     val deg = adj.groupBy(col("s").as("id"))
       .agg(count(lit(1)).as("deg"))
@@ -542,21 +501,21 @@ object Graph {
       rounds: Int, earlyStop: Boolean,
       trajectory: Option[scala.collection.mutable.ArrayBuffer[DataFrame]]
         = None): DataFrame = {
-    // stats-reset checkpoints: each round joins the previous round's
-    // checkpoint ~5 times, and plain localCheckpoint CARRIES the origin
-    // plan's sizeInBytes — which the stats visitor MULTIPLIES through
-    // every inner join, compounding ~5× in DIGIT COUNT per round until
-    // the optimizer drowns in million-digit BigInt products (three
-    // stacked levels = 9 rounds hung it; found by jstack, see
-    // graftshim.StatsReset). AQE re-plans joins from actual shuffle
-    // sizes, so dropping the estimates costs nothing at runtime.
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset.freshLocalCheckpoint _
+    // stats-reset checkpoints ([[Rounds]]): each round joins the
+    // previous round's checkpoint ~5 times, and plain localCheckpoint
+    // CARRIES the origin plan's sizeInBytes — which the stats visitor
+    // MULTIPLIES through every inner join, compounding ~5× in DIGIT
+    // COUNT per round until the optimizer drowns in million-digit
+    // BigInt products (three stacked levels = 9 rounds hung it; found
+    // by jstack). AQE re-plans joins from actual shuffle sizes, so
+    // dropping the estimates costs nothing at runtime.
     // the round state CARRIES the static degree (r16, guide §2.4): the
     // former shape re-joined `deg` twice per round (once for tot, once
     // for scored) — both |V| equi-joins and their exchanges are gone;
     // deg values are static so the carried column cannot drift (the
     // per-id max in the argmax agg below just passes it through)
-    var state = ckpt(deg.select(col("id"), col("id").as("c"), col("deg")))
+    var state = Rounds.checkpoint(
+      deg.select(col("id"), col("id").as("c"), col("deg"))).frame
     var zeroStreak = 0
     var r = 0
     while (r < rounds && (!earlyStop || zeroStreak < 2)) {
@@ -625,27 +584,16 @@ object Graph {
             org.apache.spark.sql.execution.FormattedMode))
         catch { case _: Throwable => }
       }
-      // the moved-count convergence signal rides the checkpoint's own
-      // materialization job via observe (r16): the former shape ran a
-      // separate count() job over the fresh checkpoint every round —
-      // one scheduler round-trip per round, family-wide (~14 queries)
+      // the moved count rides the checkpoint's own job via observe
       val upd =
         if (earlyStop) {
-          val (u, _, metrics) =
-            org.apache.spark.sql.graftshim.StatsReset
-              .freshLocalCheckpointCounted(updPlan.observe("__graft_mv",
-                sum(when(col("__moved"), 1L).otherwise(0L)).as("moved")))
-          // loud if the metric ever fails to surface: a silent 0 here
-          // would fake convergence and change the round count
-          val mvRow = metrics.getOrElse("__graft_mv",
-            throw new IllegalStateException("louvainRounds: observed " +
-              "moved-count metric missing from checkpoint job"))
-          val moved = if (mvRow.isNullAt(0)) 0L else mvRow.getLong(0)
-          zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
-          u
-        } else ckpt(updPlan)
+          val u = Rounds.checkpoint(updPlan, Some(coalesce(
+            sum(when(col("__moved"), 1L).otherwise(0L)), lit(0L))))
+          zeroStreak = if (u.observed == 0L) zeroStreak + 1 else 0
+          u.frame
+        } else Rounds.checkpoint(updPlan).frame
       state = upd.select(col("id"), col("c"), col("deg"))
-      // post-move slice, rides upd's ckpt
+      // post-move slice, rides upd's checkpoint
       trajectory.foreach(_ += upd.select(col("id"), col("c")))
       r += 1
     }
@@ -1026,7 +974,7 @@ object Graph {
     *
     * Scale shape (per round): one grouped count for degrees + two
     * semi-joins to induce the subgraph — all equi on node ids, the
-    * edge frame `localCheckpoint`ed every round so the plan stays O(1)
+    * edge frame checkpointed every round so the plan stays O(1)
     * deep (the [[pageRank]] discipline). Rounds are data-dependent but
     * short in practice (each round must delete ≥ 1 node to continue,
     * and real graphs cascade in a handful); `maxIters` bounds the
@@ -1039,29 +987,19 @@ object Graph {
     val raw = edges.select(srcCol.cast("long").as("a"),
         dstCol.cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    var e = raw.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    var prev = e.count()
-    var done = prev == 0L
-    var iters = 0
     def degrees(ed: DataFrame) = ed.select(col("a").as("id"))
       .unionAll(ed.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
-    while (!done && iters < maxIters) {
-      val keep = degrees(e).filter(col("degree") >= k)
+    // stable edge count = no edge left the graph: every node is >= k
+    val (e, _) = Rounds.untilStable(raw
+        .select(least(col("a"), col("b")).as("a"),
+          greatest(col("a"), col("b")).as("b"))
+        .distinct(), maxIters) { cur =>
+      val keep = degrees(cur).filter(col("degree") >= k)
         .select(col("id"))
-      val next = e
-        .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
+      cur.join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      val n = next.count()
-      done = n == prev // no edge left the graph: every node is >= k
-      e = next
-      prev = n
-      iters += 1
     }
     degrees(e).filter(col("degree") >= k)
       .select(col("id"), col("degree").as("core_degree"))
@@ -1118,32 +1056,21 @@ object Graph {
     val raw = edges.select(srcCol.cast("long").as("a"),
         dstCol.cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    // stats-reset checkpoints: each peel round's support computation
-    // stacks ~5 inner joins on the previous round's checkpoint, so
-    // carried sizeInBytes compounds geometrically (the louvainRounds
-    // lesson — see graftshim.StatsReset). Edge-count convergence rides
-    // each checkpoint's materialization job (r16) — the former
-    // per-round count() was a second job re-reading the fresh blocks.
-    val ckptN = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted _
-    val (e0, n0, _) = ckptN(raw
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct())
-    var e = e0
-    var prev = n0
-    var sup = edgeSupport(e, broadcastClosing)
-    var done = prev == 0L
-    var iters = 0
-    while (!done && iters < maxIters) {
-      val (next, n, _) = ckptN(sup.filter(col("support") >= k - 2)
-        .select(col("a"), col("b")))
-      done = n == prev
-      e = next
-      prev = n
-      if (!done) sup = edgeSupport(e, broadcastClosing)
-      iters += 1
+    // stats-reset checkpoints ([[Rounds]]): each peel round's support
+    // computation stacks ~5 inner joins on the previous round's
+    // checkpoint, so carried sizeInBytes would compound geometrically
+    // (the louvainRounds lesson). `sup` is the support of the last
+    // round's input: at the fixpoint its edge set is the output's, so
+    // it is reused; an empty or capped result gets its own support.
+    var sup: DataFrame = null
+    val (e, converged) = Rounds.untilStable(raw
+        .select(least(col("a"), col("b")).as("a"),
+          greatest(col("a"), col("b")).as("b"))
+        .distinct(), maxIters) { cur =>
+      sup = edgeSupport(cur, broadcastClosing)
+      sup.filter(col("support") >= k - 2).select(col("a"), col("b"))
     }
+    if (!converged || sup == null) sup = edgeSupport(e, broadcastClosing)
     sup.filter(col("support") >= k - 2)
   }
 
@@ -1170,9 +1097,8 @@ object Graph {
       .select(col("e.s").as("s"), col("e.t").as("t"))
     // read 3× (both wedge sides + closing set); stats-reset checkpoint:
     // this frame re-derives from the peel loop's checkpoint every round
-    // (the graftshim.StatsReset compounding lesson)
-    val oriented = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint(oriented0)
+    // (the [[Rounds]] compounding lesson)
+    val oriented = Rounds.checkpoint(oriented0).frame
     val closing = oriented.select(col("s").as("y"), col("t").as("z"))
       .unionAll(oriented.select(col("t").as("y"), col("s").as("z")))
     val tri = oriented.as("e1")
@@ -1377,14 +1303,10 @@ object Graph {
     // sum — which the former per-pivot union never pinned either —
     // plus δ = 0.0 rows for each pivot's own deepest level, which add
     // exactly 0.0 to sums and cannot flip the `> 0` filter.
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint _
-    val seed = ckpt(pivotCandidates
+    val seed = Rounds.checkpoint(pivotCandidates
       .select(pivotIdCol.cast("long").as("id"))
       .distinct().orderBy("id").limit(maxPivots)
-      .select(col("id").as("p"), col("id"), lit(1L).as("sig")))
-    val ckptN = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted _
+      .select(col("id").as("p"), col("id"), lit(1L).as("sig"))).frame
     var levels = List(seed)
     var visitedSlices = List(seed.select(col("p"), col("id")))
     var depth = 0
@@ -1397,18 +1319,18 @@ object Graph {
       // checkpointed frame every 4 levels so the anti-join input stays
       // O(1) fragments at any depth, for one extra job per 4 levels.
       if (visitedSlices.size >= 4)
-        visitedSlices = List(ckpt(visitedSlices.reduce(_ unionAll _)))
+        visitedSlices = List(Rounds.checkpoint(
+          visitedSlices.reduce(_ unionAll _)).frame)
       val visited = visitedSlices.reduce(_ unionAll _)
-      // the emptiness test rides the checkpoint job (r16) — the former
-      // count() re-read the fresh blocks once per level
-      val (next, n, _) = ckptN(levels.head.join(adj, col("id") === col("s"))
+      // the emptiness test rides the level's checkpoint job
+      val next = Rounds.checkpoint(levels.head.join(adj, col("id") === col("s"))
         .select(col("p"), col("t").as("id"), col("sig"))
         .join(visited, Seq("p", "id"), "left_anti")
         .groupBy("p", "id").agg(sum("sig").as("sig")))
-      if (n == 0) exhausted = true
+      if (next.rows == 0) exhausted = true
       else {
-        levels = next :: levels
-        visitedSlices ::= next.select(col("p"), col("id"))
+        levels = next.frame :: levels
+        visitedSlices ::= next.frame.select(col("p"), col("id"))
         depth += 1
       }
     }
@@ -1419,8 +1341,8 @@ object Graph {
     // mass; caught against a hand-rolled reference). Each step scores
     // level L as δ(v) = Σ_{(v,w) ∈ DAG} σ(v)/σ(w) · (1 + δ(w)) —
     // the level-membership joins ARE the shortest-path-DAG filter.
-    var upper = ckpt(levels.head
-      .select(col("p"), col("id"), col("sig"), lit(0.0).as("d")))
+    var upper = Rounds.checkpoint(levels.head
+      .select(col("p"), col("id"), col("sig"), lit(0.0).as("d"))).frame
     var accSlices = List.empty[DataFrame]
     for ((l, idx) <- levels.tail.zipWithIndex) {
       val contrib = upper.as("u").join(adj, col("u.id") === adj("t"))
@@ -1432,10 +1354,10 @@ object Graph {
           (col("sigv").cast("double") / col("sigw") *
             (lit(1.0) + col("dw"))).as("c"))
         .groupBy("p", "id").agg(sum("c").as("d"))
-      val down = ckpt(l
+      val down = Rounds.checkpoint(l
         .join(contrib, Seq("p", "id"), "left")
         .select(col("p"), col("id"), col("sig"),
-          coalesce(col("d"), lit(0.0)).as("d")))
+          coalesce(col("d"), lit(0.0)).as("d"))).frame
       // the pivots' own level (the last processed) never scores
       if (idx < levels.tail.size - 1)
         accSlices ::= down.select(col("id"), col("d"))
@@ -1676,32 +1598,30 @@ object Graph {
     * neighborhoods or salt-and-merge (h-index of a union is the
     * h-index of per-shard TOP-h lists, so a two-stage merge exists
     * when a hub outgrows one task). Stats-reset checkpoints per round
-    * (the compounding-BigInt lesson). */
+    * ([[Rounds]], the compounding-BigInt lesson). */
   def coreNumbers(edges: DataFrame, srcCol: Column, dstCol: Column,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "coreNumbers: rounds must be >= 1")
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint _
     val raw = edges.select(srcCol.cast("long").as("s"),
         dstCol.cast("long").as("t"))
       .filter(col("s") =!= col("t"))
     val und = raw.select(least(col("s"), col("t")).as("a"),
         greatest(col("s"), col("t")).as("b"))
       .distinct()
-    val adj = ckpt(und.select(col("a").as("s"), col("b").as("t"))
-      .unionAll(und.select(col("b").as("s"), col("a").as("t"))))
-    var est = ckpt(adj.groupBy("s").agg(count(lit(1)).as("est"))
-      .select(col("s").as("id"), col("est")))
+    val adj = Rounds.checkpoint(und.select(col("a").as("s"), col("b").as("t"))
+      .unionAll(und.select(col("b").as("s"), col("a").as("t")))).frame
+    var est = Rounds.checkpoint(adj.groupBy("s").agg(count(lit(1)).as("est"))
+      .select(col("s").as("id"), col("est"))).frame
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("s").orderBy(col("nEst").desc, col("t"))
     for (_ <- 1 to rounds) {
-      est = ckpt(adj
+      est = Rounds.checkpoint(adj
         .join(est.select(col("id").as("t"), col("est").as("nEst")),
           Seq("t"))
         .withColumn("rn", row_number().over(w))
         .select(col("s"), least(col("nEst"), col("rn")).as("cand"))
         .groupBy("s").agg(max("cand").as("est"))
-        .select(col("s").as("id"), col("est")))
+        .select(col("s").as("id"), col("est"))).frame
     }
     est.select(col("id"), col("est").as("core"))
   }
@@ -1727,14 +1647,13 @@ object Graph {
   def topoLayers(edges: DataFrame, srcCol: Column, dstCol: Column,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "topoLayers: rounds must be >= 1")
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint _
-    val e = ckpt(edges.select(srcCol.cast("long").as("s"),
+    val e = Rounds.checkpoint(edges.select(srcCol.cast("long").as("s"),
         dstCol.cast("long").as("t"))
-      .filter(col("s") =!= col("t")).distinct())
+      .filter(col("s") =!= col("t")).distinct()).frame
     val nodes = e.select(col("s").as("id"))
       .unionAll(e.select(col("t").as("id"))).distinct()
-    var layer = ckpt(nodes.select(col("id"), lit(0L).as("layer")))
+    var layer = Rounds.checkpoint(
+      nodes.select(col("id"), lit(0L).as("layer"))).frame
     def relaxed(l: DataFrame): DataFrame =
       l.join(e.join(l.select(col("id").as("s"),
             (col("layer") + 1L).as("cand")), Seq("s"))
@@ -1751,16 +1670,11 @@ object Graph {
     // this is one plain aggregate job, no checkpoint, no join. The
     // last round's Σ rides its checkpoint via observe.
     var lastSum = 0L
-    for (r <- 1 to rounds) {
-      val (next, _, metrics) = org.apache.spark.sql.graftshim.StatsReset
-        .freshLocalCheckpointCounted(relaxed(layer)
-          .observe("__graft_lsum",
-            coalesce(sum(col("layer")), lit(0L)).as("s")))
-      layer = next
-      if (r == rounds)
-        lastSum = metrics.getOrElse("__graft_lsum",
-          throw new IllegalStateException("topoLayers: observed " +
-            "layer-sum metric missing from checkpoint job")).getLong(0)
+    for (_ <- 1 to rounds) {
+      val next = Rounds.checkpoint(relaxed(layer),
+        Some(coalesce(sum(col("layer")), lit(0L))))
+      layer = next.frame
+      lastSum = next.observed.asInstanceOf[Long]
     }
     val extraSum = relaxed(layer)
       .agg(coalesce(sum(col("layer")), lit(0L))).head().getLong(0)
@@ -1810,57 +1724,35 @@ object Graph {
       maxRounds: Int = 200): DataFrame = {
     require(maxPhases >= 1 && maxRounds >= 1,
       "stronglyConnectedComponents: maxPhases and maxRounds >= 1")
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint _
-    var e = ckpt(edges.select(srcCol.cast("long").as("s"),
+    var e = Rounds.checkpoint(edges.select(srcCol.cast("long").as("s"),
         dstCol.cast("long").as("t"))
-      .filter(col("s") =!= col("t")).distinct())
-    val (active0, activeCount0, _) = org.apache.spark.sql.graftshim
-      .StatsReset.freshLocalCheckpointCounted(
-        e.select(col("s").as("id"))
-          .unionAll(e.select(col("t").as("id"))).distinct())
+      .filter(col("s") =!= col("t")).distinct()).frame
+    val Rounds.Checkpoint(active0, activeCount0, _) = Rounds.checkpoint(
+      e.select(col("s").as("id"))
+        .unionAll(e.select(col("t").as("id"))).distinct())
     var active = active0
     var activeCount = activeCount0
     var result: Option[DataFrame] = None
     var phase = 0
 
     // min-label propagation over `dir` (s → t) to fixpoint; labels
-    // only decrease, so ΣlbI strictly drops iff any row changed. The
-    // Σ rides each round checkpoint's own materialization job via
-    // observe (r16) — the former per-round agg job re-read the fresh
-    // blocks for a number the materialization already saw.
-    val ckptN = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted _
+    // only decrease, so Σlb strictly drops iff any row changed — the
+    // Σ rides each round's checkpoint job
     def minProp(dir: DataFrame, init: DataFrame): DataFrame = {
-      var lb = init
-      var prev = init.agg(coalesce(sum("lb"), lit(0L))).head().getLong(0)
-      var rounds = 0
-      var converged = false
-      while (!converged) {
-        rounds += 1
-        require(rounds <= maxRounds,
-          s"stronglyConnectedComponents: min propagation exceeded " +
-            s"maxRounds = $maxRounds — active diameter too large; " +
-            "raise maxRounds")
-        val (next, _, metrics) = ckptN(lb.join(
-            dir.join(lb.select(col("id").as("s"), col("lb").as("ls")),
+      val (lb, converged) = Rounds.untilStable(init, maxRounds,
+          Some(coalesce(sum(col("lb")), lit(0L)))) { cur =>
+        cur.join(
+            dir.join(cur.select(col("id").as("s"), col("lb").as("ls")),
                 Seq("s"))
               .groupBy(col("t").as("id")).agg(min("ls").as("nl")),
             Seq("id"), "left")
           .select(col("id"),
             least(col("lb"), coalesce(col("nl"), col("lb"))).as("lb"))
-          .observe("__graft_lbsum",
-            coalesce(sum(col("lb")), lit(0L)).as("s")))
-        lb = next
-        // loud if the metric fails to surface — a silent repeat of
-        // `prev` would fake convergence and truncate the propagation
-        val s2 = metrics.getOrElse("__graft_lbsum",
-          throw new IllegalStateException("stronglyConnectedComponents" +
-            ": observed label-sum metric missing from checkpoint job"))
-          .getLong(0)
-        converged = s2 == prev
-        prev = s2
       }
+      require(converged,
+        s"stronglyConnectedComponents: min propagation exceeded " +
+          s"maxRounds = $maxRounds — active diameter too large; " +
+          "raise maxRounds")
       lb
     }
 
@@ -1880,8 +1772,8 @@ object Graph {
         require(trimRounds <= maxRounds,
           s"stronglyConnectedComponents: trim exceeded maxRounds = " +
             s"$maxRounds — raise maxRounds")
-        // trivial-count rides the checkpoint job (r16)
-        val (trivial, nTrivial, _) = ckptN(active
+        // trivial-count rides the checkpoint job
+        val Rounds.Checkpoint(trivial, nTrivial, _) = Rounds.checkpoint(active
           .join(e.select(col("s").as("id")).distinct(), Seq("id"),
             "left_anti")
           .unionAll(active
@@ -1891,14 +1783,16 @@ object Graph {
         if (nTrivial == 0) trimming = false
         else {
           val done = trivial.select(col("id"), col("id").as("scc"))
-          result = Some(result.fold(done)(r => ckpt(r.unionAll(done))))
-          active = ckpt(active.join(trivial, Seq("id"), "left_anti"))
+          result = Some(result.fold(done)(r =>
+            Rounds.checkpoint(r.unionAll(done)).frame))
+          active = Rounds.checkpoint(
+            active.join(trivial, Seq("id"), "left_anti")).frame
           activeCount -= nTrivial
-          e = ckpt(e
+          e = Rounds.checkpoint(e
             .join(trivial.select(col("id").as("s")), Seq("s"),
               "left_anti")
             .join(trivial.select(col("id").as("t")), Seq("t"),
-              "left_anti"))
+              "left_anti")).frame
         }
       }
       if (activeCount == 0) {
@@ -1908,20 +1802,22 @@ object Graph {
       val f = minProp(e, init)
       val b = minProp(e.select(col("t").as("s"), col("s").as("t")),
         init)
-      val done = ckpt(f.join(b.select(col("id"),
+      val done = Rounds.checkpoint(f.join(b.select(col("id"),
           col("lb").as("lb2")), Seq("id"))
         .filter(col("lb") === col("lb2"))
-        .select(col("id"), col("lb").as("scc")))
-      result = Some(result.fold(done)(r => ckpt(r.unionAll(done))))
-      // active-count rides the checkpoint job (r16)
-      val (nextActive, nActive, _) = ckptN(active
+        .select(col("id"), col("lb").as("scc"))).frame
+      result = Some(result.fold(done)(r =>
+        Rounds.checkpoint(r.unionAll(done)).frame))
+      // active-count rides the checkpoint job
+      val next = Rounds.checkpoint(active
         .join(done.select("id"), Seq("id"), "left_anti"))
-      active = nextActive
-      activeCount = nActive
+      active = next.frame
+      activeCount = next.rows
       if (activeCount > 0)
-        e = ckpt(e
+        e = Rounds.checkpoint(e
           .join(done.select(col("id").as("s")), Seq("s"), "left_anti")
           .join(done.select(col("id").as("t")), Seq("t"), "left_anti"))
+          .frame
     }
     result.getOrElse(active.select(col("id"), col("id").as("scc")))
   }
@@ -1999,14 +1895,12 @@ object Graph {
       dstCol: Column, sources: DataFrame, sourceIdCol: Column,
       maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, "harmonicCentrality: maxDepth must be >= 1")
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint _
     val raw = edges.select(srcCol.cast("long").as("s"),
         dstCol.cast("long").as("t"))
       .filter(col("s") =!= col("t"))
-    val adj = ckpt(raw
+    val adj = Rounds.checkpoint(raw
       .unionAll(raw.select(col("t").as("s"), col("s").as("t")))
-      .distinct())
+      .distinct()).frame
     // NOTE (r15 measured, kept as-was): a frontier-based rewrite
     // (expand only the newly-discovered (src, id) pairs, anti-join
     // the accumulated slices, early-exit on an empty frontier) was
@@ -2015,15 +1909,16 @@ object Graph {
     // whole accumulated pair set every round — the same bytes the
     // grouped-min pass already moves — plus an extra count job per
     // round and fragmented union scans. Reverted.
-    var dist = ckpt(sources.select(sourceIdCol.cast("long").as("src"))
+    var dist = Rounds.checkpoint(sources
+      .select(sourceIdCol.cast("long").as("src"))
       .distinct()
-      .select(col("src"), col("src").as("id"), lit(0L).as("dist")))
+      .select(col("src"), col("src").as("id"), lit(0L).as("dist"))).frame
     for (_ <- 1 to maxDepth) {
       val nxt = dist.join(adj, col("id") === col("s"))
         .select(col("src"), col("t").as("id"),
           (col("dist") + 1L).as("dist"))
-      dist = ckpt(dist.unionAll(nxt)
-        .groupBy("src", "id").agg(min("dist").as("dist")))
+      dist = Rounds.checkpoint(dist.unionAll(nxt)
+        .groupBy("src", "id").agg(min("dist").as("dist"))).frame
     }
     dist.filter(col("dist") > 0)
       .groupBy("id")
@@ -2101,28 +1996,26 @@ object Graph {
   def randomWalks(edges: DataFrame, srcCol: Column, dstCol: Column,
       steps: Int): DataFrame = {
     require(steps >= 1, "randomWalks: steps must be >= 1")
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint _
     val raw = edges.select(srcCol.cast("long").as("s"),
         dstCol.cast("long").as("t"))
       .filter(col("s") =!= col("t"))
-    val adj = ckpt(raw
+    val adj = Rounds.checkpoint(raw
       .unionAll(raw.select(col("t").as("s"), col("s").as("t")))
-      .distinct())
-    var cur = ckpt(adj.select(col("s").as("start")).distinct()
-      .select(col("start"), col("start").as("node")))
+      .distinct()).frame
+    var cur = Rounds.checkpoint(adj.select(col("s").as("start")).distinct()
+      .select(col("start"), col("start").as("node"))).frame
     val slices = Seq.newBuilder[DataFrame]
     slices += cur.select(col("start"), lit(0L).as("step"),
       col("node"))
     for (st <- 1 to steps) {
-      cur = ckpt(cur.join(adj, col("node") === col("s"))
+      cur = Rounds.checkpoint(cur.join(adj, col("node") === col("s"))
         .select(col("start"),
           md5(concat_ws(":", col("start"), lit(st.toLong),
             col("t"))).as("h"),
           col("t"))
         .groupBy("start")
         .agg(min(struct(col("h"), col("t"))).as("m"))
-        .select(col("start"), col("m.t").as("node")))
+        .select(col("start"), col("m.t").as("node"))).frame
       slices += cur.select(col("start"), lit(st.toLong).as("step"),
         col("node"))
     }
@@ -2217,19 +2110,14 @@ object Graph {
   def maximalMatching(edges: DataFrame, srcCol: Column,
       dstCol: Column, rounds: Int): DataFrame = {
     require(rounds >= 1, "maximalMatching: rounds must be >= 1")
-    val ckpt = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpoint _
     val raw = edges.select(srcCol.cast("long").as("s"),
         dstCol.cast("long").as("t"))
       .filter(col("s") =!= col("t"))
-    // active-edge counts ride each checkpoint's materialization job
-    // (r16): kills the former end-of-loop limit(1).collect probe AND
-    // lets exhausted inputs exit early — converged (empty) rounds are
+    // active-edge counts ride each checkpoint's materialization job, so
+    // exhausted inputs exit early — converged (empty) rounds are
     // no-ops, so skipping them cannot change the output (their slices
     // would be empty frames).
-    val ckptN = org.apache.spark.sql.graftshim.StatsReset
-      .freshLocalCheckpointCounted _
-    val (act0, actN0, _) = ckptN(raw
+    val Rounds.Checkpoint(act0, actN0, _) = Rounds.checkpoint(raw
       .select(least(col("s"), col("t")).as("a"),
         greatest(col("s"), col("t")).as("b"))
       .distinct()
@@ -2247,19 +2135,19 @@ object Graph {
           col("b")))
         .groupBy("id")
         .agg(min(struct(col("h"), col("a"), col("b"))).as("m"))
-      val mr = ckpt(act
+      val mr = Rounds.checkpoint(act
         .join(prio.select(col("id").as("a"), col("m").as("ma")), "a")
         .join(prio.select(col("id").as("b"), col("m").as("mb")), "b")
         .filter(col("ma") === eStruct && col("mb") === eStruct)
-        .select(col("a"), col("b"), lit(r.toLong).as("round")))
+        .select(col("a"), col("b"), lit(r.toLong).as("round"))).frame
       slices += mr
       val mn = mr.select(col("a").as("id"))
         .unionAll(mr.select(col("b").as("id")))
-      val (nextAct, nextN, _) = ckptN(act
+      val next = Rounds.checkpoint(act
         .join(mn, col("a") === col("id"), "left_anti")
         .join(mn, col("b") === col("id"), "left_anti"))
-      act = nextAct
-      actN = nextN
+      act = next.frame
+      actN = next.rows
       r += 1
     }
     require(actN == 0L,

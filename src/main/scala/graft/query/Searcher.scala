@@ -123,13 +123,7 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
       .crossJoin(broadcast(qdf))
       .select(col("query_id"), col("id"),
         cosine_similarity(col("vector"), col("qvec")).as("sim"))
-    graft.ops.TopK.perGroup(scored, Seq(col("query_id")), col("id"), col("sim"), p.k)
-      .filter(col("sim") >= p.threshold) // after top-k, per query
-      .join(vectors.select("id", "text", "metadata"), Seq("id"))
-      .withColumn("similarity_score", least(greatest(col("sim"), lit(0.0)), lit(1.0)))
-      .withColumn("distance", lit(1.0) - col("sim"))
-      .select("query_id", "id", "text", "metadata", "similarity_score", "distance")
-      .orderBy(col("query_id"), col("similarity_score").desc, col("id"))
+    manyTail(vectors, scored, p)
   }
 
   /** Driver-side hits `(id, text, metadata, similarity_score, distance)`
@@ -381,7 +375,7 @@ final class Searcher(spark: SparkSession, store: VectorStore) {
       p: Searcher.Params): Seq[(String, Array[Float])] =
     queries.map { case (qid, text) => (qid, embedQuery(text, p)) }
 
-  /** Shared tail of the batched approximate searches: per-query bounded
+  /** Shared tail of the batched searches, exact and approximate: per-query bounded
     * top-k over the scored candidates, threshold AFTER top-k (§4.1), then
     * one broadcast-joined text/metadata lookup for all queries at once. */
   private def manyTail(vectors: DataFrame, scored: DataFrame,

@@ -24,44 +24,27 @@ import org.apache.spark.sql.execution.LogicalRDD
   * STATS lineage with it is the right semantic for a loop. This helper
   * re-wraps the freshly checkpointed RDD in a bare [[LogicalRDD]] with
   * `originStats = None` (sizeInBytes falls back to
-  * `spark.sql.defaultSizeInBytes`), keeping the materialized blocks,
-  * output attributes, partitioning and ordering. Static broadcast
-  * planning loses the estimate, but AQE re-plans joins from ACTUAL
-  * shuffle sizes at runtime, which is the regime every caller runs in.
+  * `spark.sql.defaultSizeInBytes`), keeping the materialized blocks and
+  * output attributes. It keeps whatever partitioning and ordering the
+  * checkpoint reports, and with AQE on that is none:
+  * `LogicalRDD.fromDataset` reads them off the `AdaptiveSparkPlanExec`
+  * wrapper, which reports `UnknownPartitioning` and no ordering
+  * (MEASUREMENT.md #11). Static broadcast planning loses the estimate,
+  * but AQE re-plans joins from ACTUAL shuffle sizes at runtime, which
+  * is the regime every caller runs in.
   *
   * Lives under `org.apache.spark.sql` because [[Dataset.ofRows]] and
   * [[LogicalRDD]] are `private[sql]` — the standard extension-library
   * shim pattern; only public-behavior Spark APIs are touched otherwise.
+  * [[graft.ops.Rounds]] is its one caller.
   */
 object StatsReset {
 
   /** `df.localCheckpoint(eager = true)` with the origin statistics
-    * dropped — use inside iterative loops whose rounds JOIN the
-    * previous round's checkpoint (see class doc). */
-  def freshLocalCheckpoint(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val ck = df.localCheckpoint(true).asInstanceOf[Dataset[Row]]
-    val spark = ck.sparkSession
-    ck.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        // keep the materialized RDD + physical properties; drop ONLY
-        // the carried stats (and constraints, same compounding risk)
-        Dataset.ofRows(spark, LogicalRDD(l.output, l.rdd,
-          l.outputPartitioning, l.outputOrdering, l.isStreaming,
-          None)(spark, None, None))
-      case _ =>
-        // not the checkpoint shape we expect — fail loudly rather than
-        // silently keep compounding stats
-        throw new IllegalStateException(
-          "StatsReset.freshLocalCheckpoint: localCheckpoint did not " +
-            s"produce a LogicalRDD plan: ${ck.queryExecution.analyzed}")
-    }
-  }
-
-  /** [[freshLocalCheckpoint]] that also RETURNS the row count (and any
-    * `Dataset.observe` metrics attached to `df`'s plan) captured from
-    * the SAME job the eager checkpoint already runs to materialize the
-    * blocks — `Dataset.localCheckpoint(eager = true)` internally calls
+    * dropped that also RETURNS the row count (and any `Dataset.observe`
+    * metrics attached to `df`'s plan) captured from the SAME job the
+    * eager checkpoint already runs to materialize the blocks —
+    * `Dataset.localCheckpoint(eager = true)` internally calls
     * `rdd.count()` and throws the number away, forcing every iterative
     * loop that needs a convergence signal (frontier size, changed-row
     * count, a monotone Σ) to pay a SECOND job per round re-scanning
@@ -70,8 +53,7 @@ object StatsReset {
     * (Spark 4.1: execute → copy rows → `rdd.localCheckpoint()` →
     * `rdd.count()` → wrap in `LogicalRDD.fromDataset`) but keeps the
     * count and reads `queryExecution.observedMetrics` after the job,
-    * so the convergence check costs ZERO extra jobs. Stats are dropped
-    * as in [[freshLocalCheckpoint]].
+    * so the convergence check costs ZERO extra jobs.
     *
     * Returns `(checkpointed frame, row count, observed metrics)` —
     * metrics keyed by the `observe(name, …)` names in `df`'s plan
@@ -89,61 +71,12 @@ object StatsReset {
     val out = LogicalRDD.fromDataset(internalRdd, ds,
         isStreaming = false) match {
       case l: LogicalRDD =>
+        // keep the materialized RDD + physical properties; drop ONLY
+        // the carried stats (and constraints, same compounding risk)
         Dataset.ofRows(spark, LogicalRDD(l.output, l.rdd,
           l.outputPartitioning, l.outputOrdering, l.isStreaming,
           None)(spark, None, None))
     }
     (out, n, metrics)
-  }
-
-  /** Checkpoint `df` hash-clustered AND sorted by `key`, with the
-    * physical properties STAMPED on the checkpoint so iterative rounds
-    * can actually use them (r16). Why stamping is needed: with AQE on,
-    * `executedPlan` is an `AdaptiveSparkPlanExec` whose
-    * `outputPartitioning`/`outputOrdering` surface as
-    * `UnknownPartitioning`/empty, so `LogicalRDD.fromDataset` silently
-    * DROPS the properties every `localCheckpoint` call in this repo
-    * relied on (measured: the r16 partitioning probe; AQE off
-    * preserves both) — co-partitioned joins against checkpoints never
-    * engaged. This helper runs two jobs: one counted checkpoint of
-    * `df` (the caller usually needed that materialization anyway — its
-    * count sizes the layout), then an explicit
-    * `repartition(N, key)` + `sortWithinPartitions(key)` pass whose
-    * placement is EXACTLY `HashPartitioning(key, N)` (a user-specified
-    * partition count is exempt from AQE coalescing, so the claim
-    * cannot drift), stamped together with the ascending sort order on
-    * the rewrapped LogicalRDD. `N = min(spark.sql.shuffle.partitions,
-    * rows/rowsPerPartition + 1)` — derived from the frame's measured
-    * size (guide §2.2's fewer-larger-partitions rule), not a local
-    * constant: a tiny local frame lands on 1 partition, a corpus-scale
-    * frame fans out to the operator-configured parallelism.
-    * Returns `(clustered checkpoint, row count of df)`. */
-  def freshLocalCheckpointKeyed(df: org.apache.spark.sql.DataFrame,
-      key: String, rowsPerPartition: Long = 1L << 20)
-      : (org.apache.spark.sql.DataFrame, Long) = {
-    import org.apache.spark.sql.functions.col
-    val (tmp, n, _) = freshLocalCheckpointCounted(df)
-    val spark = tmp.asInstanceOf[Dataset[Row]].sparkSession
-    val maxP = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val p = math.max(1L, math.min(maxP.toLong,
-      n / math.max(1L, rowsPerPartition) + 1L)).toInt
-    val laid = tmp.repartition(p, col(key)).sortWithinPartitions(key)
-      .asInstanceOf[Dataset[Row]]
-    val rdd = laid.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    rdd.count()
-    val out = LogicalRDD.fromDataset(rdd, laid, isStreaming = false) match {
-      case l: LogicalRDD =>
-        val keyAttr = l.output.find(_.name == key).getOrElse(
-          throw new IllegalArgumentException(
-            s"freshLocalCheckpointKeyed: no output column named $key"))
-        val part = org.apache.spark.sql.catalyst.plans.physical
-          .HashPartitioning(Seq(keyAttr), p)
-        val ord = Seq(org.apache.spark.sql.catalyst.expressions.SortOrder(
-          keyAttr, org.apache.spark.sql.catalyst.expressions.Ascending))
-        Dataset.ofRows(spark, LogicalRDD(l.output, l.rdd, part, ord,
-          l.isStreaming, None)(spark, None, None))
-    }
-    (out, n)
   }
 }

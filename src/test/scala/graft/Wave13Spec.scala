@@ -8,10 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-15 (optimization round) pins: the loud counted-cell guards
   * added to the batch pairwise-join ops (round-14 verdict weak #2),
   * the degenerate-case row-presence fixes (cochranQ one-row contract,
-  * crossCorrelation all-lags contract), and equivalence pins for the
-  * operators whose PLANS changed this round (fused Louvain argmax,
-  * frontier-based BFS/harmonic, batched multi-pivot betweenness) —
-  * semantics must be bit-identical, only the plan shape moved. */
+  * crossCorrelation all-lags contract), the survivorshipMerge null-key
+  * drop, and equivalence pins for two operators whose PLANS changed
+  * this round (fused Louvain argmax, BFS/harmonic distances on a path)
+  * — semantics must be bit-identical, only the plan shape moved. The
+  * batched multi-pivot betweenness has no pin here. */
 class Wave13Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
