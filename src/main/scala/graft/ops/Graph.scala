@@ -135,7 +135,7 @@ object Graph {
       .unionAll(ed.select(col("b").as("id"), col("w")))
       .groupBy("id").agg(sum("w").as("wdeg"))
     // peel until no edge leaves: the edge count rides each round's
-    // checkpoint job (no per-round count() job)
+    // checkpoint job
     val (e, _) = Rounds.untilStable(raw
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"), col("w"))
