@@ -32,38 +32,12 @@ final class GraftSession(val spark: SparkSession, warehouse: String) {
     store.vectors(db).select("id", "vector", "text", "metadata").as[Chunk]
   }
 
-  /** Typed search (`Dataset[SearchHit]`), same semantics as
-    * [[graft.query.Searcher.search]]. */
-  def search(db: String, query: String,
-      p: Searcher.Params = Searcher.Params()): Dataset[SearchHit] = {
+  /** Typed search (`Dataset[SearchHit]`) over any [[Searcher.Index]], same
+    * semantics as [[graft.query.Searcher.search]]. */
+  def search(db: String, query: String, p: Searcher.Params = Searcher.Params(),
+      index: Searcher.Index = Searcher.Flat): Dataset[SearchHit] = {
     import spark.implicits._
-    searcher.search(db, query, p)
-      .select("id", "text", "metadata", "similarity_score", "distance")
-      .as[SearchHit]
-  }
-
-  def searchDf(db: String, query: String): DataFrame =
-    searcher.search(db, query)
-
-  /** Typed IVF approximate search over a [[VectorStore.writeVectorsIvf]]
-    * store (learned-centroid partition pruning). */
-  def searchIvf(db: String, query: String,
-      p: Searcher.Params = Searcher.Params(), nprobe: Int = 2): Dataset[SearchHit] = {
-    import spark.implicits._
-    searcher.searchIvf(db, query, p, nprobe)
-      .select("id", "text", "metadata", "similarity_score", "distance")
-      .as[SearchHit]
-  }
-
-  /** Typed graph-index search over a [[VectorStore.writeHnsw]] layout:
-    * beam descent with directory-pruned adjacency reads. */
-  def searchHnsw(db: String, query: String,
-      p: Searcher.Params = Searcher.Params(),
-      ef: Int = 50): Dataset[SearchHit] = {
-    import spark.implicits._
-    searcher.searchHnsw(db, query, p, ef)
-      .select("id", "text", "metadata", "similarity_score", "distance")
-      .as[SearchHit]
+    searcher.search(db, query, p, index).as[SearchHit]
   }
 
   /** Hybrid (BM25 + cosine RRF) search; drops the fusion score to return
@@ -72,17 +46,6 @@ final class GraftSession(val spark: SparkSession, warehouse: String) {
       p: Searcher.Params = Searcher.Params()): Dataset[SearchHit] = {
     import spark.implicits._
     searcher.searchHybrid(db, query, p)
-      .select("id", "text", "metadata", "similarity_score", "distance")
-      .as[SearchHit]
-  }
-
-  /** Typed quantized search over a [[VectorStore.writeVectorsQuantized]]
-    * side table (`mode = "sq8" | "binary"`), exact-cosine refined. */
-  def searchQuantized(db: String, query: String,
-      p: Searcher.Params = Searcher.Params(), mode: String = "sq8",
-      rerank: Int = 50): Dataset[SearchHit] = {
-    import spark.implicits._
-    searcher.searchQuantized(db, query, p, mode, rerank)
       .select("id", "text", "metadata", "similarity_score", "distance")
       .as[SearchHit]
   }

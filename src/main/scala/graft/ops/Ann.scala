@@ -277,9 +277,9 @@ object Ann {
 
   /** Hamming distance between a packed-words column and a packed query:
     * `Σ bit_count(xor)` over the words — pure codegen'd built-ins. */
-  def hammingCol(sig: Column, qWords: Seq[Long]): Column =
+  def hammingCol(sig: Column, qWords: Column): Column =
     aggregate(
-      zip_with(sig, typedLit(qWords), (a, b) =>
+      zip_with(sig, qWords, (a, b) =>
         bit_count(a.bitwiseXOR(b)).cast("long")),
       lit(0L), (acc, x) => acc + x)
 
@@ -294,7 +294,7 @@ object Ann {
   def binaryTopK(emb: DataFrame, idCol: Column, vecCol: Column,
       query: Array[Float], k: Int, rerank: Int): DataFrame = {
     val hamming = hammingCol(packWordsCol(vecCol, query.length),
-      packWords(query))
+      typedLit(packWords(query)))
     emb.select(idCol.as("id"), vecCol.as("v"), hamming.as("hamming"))
       .orderBy(col("hamming"), col("id"))
       .limit(rerank)
@@ -327,9 +327,7 @@ object Ann {
         packWordsCol(vecCol, d).as("sig"))
       .crossJoin(broadcast(qdf))
       .select(col("query_id"), col("id"),
-        aggregate(zip_with(col("sig"), col("qwords"), (a, b) =>
-            bit_count(a.bitwiseXOR(b)).cast("long")),
-          lit(0L), (acc, x) => acc + x).as("hamming"))
+        hammingCol(col("sig"), col("qwords")).as("hamming"))
     val cands = TopK.perGroup(scoredAll.withColumn("neg", -col("hamming")),
       Seq(col("query_id")), col("id"), col("neg"), rerank)
       .select(col("query_id"), col("id"))

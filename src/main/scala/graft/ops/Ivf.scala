@@ -268,8 +268,8 @@ object Ivf {
     * (`array_contains`), so per-row scoring work is |queries probing this
     * cell|, not |queries|. Per-query top-k via [[TopKAggregator]]: map-side
     * buffers cap the exchange at partitions × queries × k structs. Output:
-    * `(query_id, rnk, id, sim)` — the searchMany amortization
-    * ([[graft.query.Searcher.searchMany]]) on the IVF scan-reduction path. */
+    * `(query_id, rnk, id, sim)` — the batched-search amortization
+    * ([[graft.query.Searcher]]) on the IVF scan-reduction path. */
   def ivfTopKMany(emb: DataFrame, idCol: Column, vecCol: Column,
       queries: Seq[(String, Array[Float])], k: Int, nlist: Int = 8,
       iters: Int = 2, nprobe: Int = 2, sampleFraction: Int = 50): DataFrame = {
@@ -287,7 +287,7 @@ object Ivf {
     // non-nullable, so the inner join's inferred `isnotnull(cluster)` —
     // which would push a SECOND nearest_centroid evaluation into the scan
     // filter — folds away (null vectors get cluster -1, in no probe list).
-    // The STORE path ([[graft.query.Searcher.searchManyIvf]]) keeps its
+    // The STORE path (an [[graft.query.Searcher.Ivf]] search) keeps its
     // filter — there `cluster` is a stored partition column, and the
     // filter is directory-level pruning.
     val scored = emb.select(idCol.as("id"), vecCol.as("v"))

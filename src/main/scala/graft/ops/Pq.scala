@@ -127,7 +127,7 @@ object Pq {
     * cosine). Both the cell assignment and the ADC lookup are row-local
     * literal-driven projections: the scoring plan has zero exchanges, and
     * on a cluster-partitioned store the probe filter becomes directory
-    * pruning exactly as in [[graft.query.Searcher.searchIvf]].
+    * pruning exactly as in an [[graft.query.Searcher.Ivf]] search.
     *
     * Codebooks here quantize the RAW vectors (query-independent, shareable
     * across cells); classical FAISS IVFADC quantizes residuals v − C_cell,

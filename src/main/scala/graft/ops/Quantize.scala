@@ -55,10 +55,10 @@ object Quantize {
 
   /** Approximate dot product from a materialized codes/scale pair and a
     * [[quantizeQuery]] result: exact integer dot, one double rescale. */
-  def approxDotCol(codes: Column, scale: Column, qCodes: Seq[Int],
-      qScale: Double): Column =
+  def approxDotCol(codes: Column, scale: Column, qCodes: Column,
+      qScale: Column): Column =
     aggregate(
-      zip_with(codes, typedLit(qCodes), (a, b) => (a * b).cast("long")),
+      zip_with(codes, qCodes, (a, b) => (a * b).cast("long")),
       lit(0L), (acc, x) => acc + x).cast("double") * scale * qScale
 
   /** Batched SQ8 search: the [[graft.ops.Ann.binaryTopKMany]] shape on the
@@ -81,10 +81,7 @@ object Quantize {
         int8Codes(col("v"), col("sc")).as("codes"))
       .crossJoin(broadcast(qdf))
       .select(col("query_id"), col("id"),
-        (aggregate(zip_with(col("codes"), col("qcodes"),
-            (a, b) => (a * b).cast("long")),
-          lit(0L), (acc, x) => acc + x).cast("double") * col("sc") * col("qsc"))
-          .as("approx"))
+        approxDotCol(col("codes"), col("sc"), col("qcodes"), col("qsc")).as("approx"))
     val cands = TopK.perGroup(scored, Seq(col("query_id")), col("id"),
       col("approx"), rerank).select(col("query_id"), col("id"))
     graft.ops.Ann.refineMany(cands, emb, idCol, vecCol,
@@ -107,7 +104,8 @@ object Quantize {
       .select(col("id"), col("v"), col("sc"),
         int8Codes(col("v"), col("sc")).as("codes"))
       .select(col("id"), col("v"),
-        approxDotCol(col("codes"), col("sc"), qCodes, qScale).as("approx"))
+        approxDotCol(col("codes"), col("sc"), typedLit(qCodes), lit(qScale))
+          .as("approx"))
       .orderBy(col("approx").desc, col("id"))
       .limit(rerank)
       .select(col("id"), round(col("approx"), 4).as("approx"),

@@ -50,7 +50,8 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
     * probes B buckets reads B/2^nbits of the data via plain partition
     * pruning — the 100 TB scan-reduction path, with no custom planner rule
     * needed. Within each bucket, files stay sorted by id for the lookup
-    * phase. */
+    * phase. `(nbits, seed)` persist beside the table ([[lshParams]]), so a
+    * search hashes its query into the same cells. */
   def writeVectorsClustered(db: String, vectors: DataFrame, nbits: Int = 4,
       seed: Long = 42L): Unit = {
     vectors
@@ -61,6 +62,19 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
       .option("maxRecordsPerFile", 100000)
       .partitionBy("bucket")
       .parquet(s"${dbDir(db)}/vectors")
+    atomicWrite(s"${dbDir(db)}/lsh.json", s"""{"nbits": $nbits, "seed": $seed}""")
+  }
+
+  /** `(nbits, seed)` of a [[writeVectorsClustered]] layout, read on the
+    * driver (no Spark job). */
+  def lshParams(db: String): (Int, Long) = {
+    val file = Paths.get(s"${dbDir(db)}/lsh.json")
+    if (!Files.exists(file)) throw new IllegalStateException(
+      s"'$db' has no LSH parameters: write it with writeVectorsClustered")
+    val txt = new String(Files.readAllBytes(file), StandardCharsets.UTF_8)
+    val m = """\{"nbits":\s*(\d+),\s*"seed":\s*(-?\d+)\}""".r.findFirstMatchIn(txt)
+      .getOrElse(throw new IllegalStateException(s"malformed LSH parameters of '$db': $txt"))
+    (m.group(1).toInt, m.group(2).toLong)
   }
 
   /** IVF clustered layout with LEARNED centroids ([[graft.ops.Ivf]]): like
@@ -93,7 +107,7 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
     * to `hops × ef × M`, not to the graph. Construction uses the
     * IVF-pruned build when `nlist > 0` (the corpus-scale path), the
     * exact broadcast build otherwise; `(m, max_level, buckets)` persist
-    * beside the edges for [[graft.query.Searcher.searchHnsw]]. */
+    * beside the edges for the [[graft.query.Searcher.Hnsw]] search. */
   def writeHnsw(db: String, vectors: DataFrame, m: Int = 8,
       maxLevel: Int = 2, nlist: Int = 0, buckets: Int = 32): Unit = {
     val edges =
@@ -120,7 +134,7 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
 
   /** `(m, max_level, buckets)` of a [[writeHnsw]] layout. */
   def hnswMeta(db: String): (Int, Int, Int) = {
-    val r = spark.read.parquet(s"${dbDir(db)}/hnsw_meta").head()
+    val r = sideTable(db, "hnsw_meta", "m INT, max_level INT, buckets INT").head()
     (r.getInt(0), r.getInt(1), r.getInt(2))
   }
 
@@ -162,7 +176,7 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
 
   /** Learned centroids of an IVF store (tiny: nlist × dim floats). */
   def centroids(db: String): Seq[(Int, Seq[Float])] =
-    spark.read.parquet(s"${dbDir(db)}/centroids")
+    sideTable(db, "centroids", "cid INT, c ARRAY<FLOAT>")
       .collect()
       .map(r => r.getAs[Int]("cid") ->
         (r.getAs[Seq[Float]]("c").toVector: Seq[Float]))
@@ -170,7 +184,7 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
 
   /** IVF-PQ layout: the [[writeVectorsIvf]] cluster-partitioned vectors
     * table (phase-2 text/metadata lookups) PLUS a `pq_codes` side table of
-    * `(id, codes)` per cluster — the scan [[graft.query.Searcher.searchPq]]
+    * `(id, codes)` per cluster — the scan a [[graft.query.Searcher.Pq]] search
     * actually reads: m small ints per vector instead of the dim-float
     * array (the 16× scan-size cut that makes the candidate pass
     * memory-resident at billion scale), pruned by the same cluster
@@ -216,7 +230,7 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
     * `(id, sc, codes, sig)` — ~d bytes + d/8 bits per row instead of 4d
     * float bytes, so both the SQ8 and binary candidate scans read a
     * fraction of the vectors table's bandwidth
-    * ([[graft.query.Searcher.searchQuantized]] refines the few candidates
+    * (a [[graft.query.Searcher.Quantized]] search verifies the few candidates
     * against the full vectors). Derived from the already-written vectors
     * table (one clean re-read, same as the PQ codes path). */
   def writeVectorsQuantized(db: String): Unit = {
@@ -235,12 +249,16 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
 
   /** The quantized side table of [[writeVectorsQuantized]]. */
   def quantCodes(db: String): DataFrame =
-    spark.read.parquet(s"${dbDir(db)}/quant_codes")
+    sideTable(db, "quant_codes", "id BIGINT, sc DOUBLE, codes ARRAY<INT>, sig ARRAY<BIGINT>")
+
+  /** The `(id, codes, cluster)` side table of [[writeVectorsPq]]. */
+  def pqCodes(db: String): DataFrame =
+    sideTable(db, "pq_codes", "id BIGINT, codes ARRAY<INT>, cluster INT")
 
   /** Per-subspace PQ codebooks of a [[writeVectorsPq]] store (tiny:
     * m × ksub × dim/m floats). */
   def codebooks(db: String): Seq[Seq[(Int, Seq[Float])]] =
-    spark.read.parquet(s"${dbDir(db)}/codebooks")
+    sideTable(db, "codebooks", "sub INT, cid INT, c ARRAY<FLOAT>")
       .collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Int]("cid"),
         r.getAs[Seq[Float]]("c").toVector: Seq[Float]))
@@ -307,6 +325,11 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
     fs.delete(live, true)
     fs.rename(new org.apache.hadoop.fs.Path(tmp), live)
   }
+
+  /** A side table the store writes with a fixed schema, read with that
+    * schema: no Spark job infers it from the parquet footers. */
+  private def sideTable(db: String, table: String, schema: String): DataFrame =
+    spark.read.schema(schema).parquet(s"${dbDir(db)}/$table")
 
   def vectors(db: String): DataFrame = spark.read.parquet(s"${dbDir(db)}/vectors")
   def documents(db: String): DataFrame = spark.read.parquet(s"${dbDir(db)}/documents")

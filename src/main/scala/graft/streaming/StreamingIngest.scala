@@ -41,7 +41,7 @@ object StreamingIngest {
     // layout fresh — each batch's vectors are assigned row-locally against
     // the FIXED centroids (no retraining, no shuffle beyond the partition
     // write) and appended under their cluster directories, so
-    // [[graft.query.Searcher.searchIvf]]'s directory pruning stays valid
+    // an [[graft.query.Searcher.Ivf]] search's directory pruning stays valid
     // as data streams in. Re-cluster by re-running writeVectorsIvf when
     // drift warrants it.
     val ivfCentroids: Option[Seq[(Int, Seq[Float])]] =
@@ -50,7 +50,8 @@ object StreamingIngest {
     // streaming HNSW maintenance: a store with a persisted layered graph
     // ([[VectorStore.writeHnsw]]) links each batch's vectors into it
     // incrementally ([[VectorStore.appendHnsw]] — shared beam descent +
-    // integer re-cap, no re-scoring), so searchHnsw stays current as data
+    // integer re-cap, no re-scoring), so an [[graft.query.Searcher.Hnsw]]
+    // search stays current as data
     // streams in without a per-batch graph rebuild.
     val hnswStore: Boolean =
       try { store.hnswMeta(db); true } catch { case _: Exception => false }

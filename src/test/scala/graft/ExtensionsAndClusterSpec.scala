@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -23,6 +26,21 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Rows the Spark jobs of `f` read from storage, counted on a drained
+    * listener bus. */
+  private def rowsRead(f: => Unit): Long = {
+    val n = new AtomicLong()
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.recordsRead))
+    }
+    GraftTestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; GraftTestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 
   test("extensions: functions resolve in pure SQL without registerAll") {
     spark.sparkContext.setLogLevel("WARN")
@@ -194,14 +212,15 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val searcher = new Searcher(spark, store)
     val p = Searcher.Params(k = 5, threshold = -1.0)
-    val hits = searcher.searchApprox("cdb", "doc query text", p,
-      nbits = 3, probes = 1)
+    val hits = searcher.search("cdb", "doc query text", p, Searcher.Lsh(probes = 1))
     val n = hits.count()
     assert(n > 0 && n <= 5)
-    // pruning: the scan must read fewer files than the full table
-    val plan = searcher.searchApprox("cdb", "doc query text", p, nbits = 3,
-      probes = 0).queryExecution.executedPlan.toString
-    assert(plan.contains("bucket")) // partition filter present
+    // pruning: probing one of the 8 cells reads fewer rows than the table
+    // (the nbits = 3 the store was written with is read back from it)
+    assert(store.lshParams("cdb") == ((3, 42L)))
+    val read = rowsRead(searcher.search("cdb", "doc query text", p,
+      Searcher.Lsh(probes = 0)).collect())
+    assert(read > 0 && read < store.vectors("cdb").count(), s"read $read rows")
 
     // exact search on the same clustered store still works (extra bucket
     // column is ignored by the two-phase path)
@@ -209,15 +228,21 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exact.count() == 5)
 
     // batched LSH search agrees with the one-query path per query
-    val many = searcher.searchManyApprox("cdb",
+    val many = searcher.search("cdb",
       Seq("a" -> "doc query text", "b" -> "other words entirely"), p,
-      nbits = 3, probes = 1).collect()
+      Searcher.Lsh(probes = 1)).collect()
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("id"), r.getAs[Double]("similarity_score"))
     val aHits = many.filter(_.getAs[String]("query_id") == "a").map(key).sortBy(_._1)
     assert(aHits.toSeq ==
       hits.collect().map(key).sortBy(_._1).toSeq)
     assert(many.count(_.getAs[String]("query_id") == "b") <= 5)
+
+    // a store without recorded LSH parameters says how to get them
+    Files.delete(java.nio.file.Paths.get(s"$work/wh/cdb/lsh.json"))
+    val e = intercept[IllegalStateException](
+      searcher.search("cdb", "doc query text", p, Searcher.Lsh(probes = 1)))
+    assert(e.getMessage.contains("writeVectorsClustered"))
   }
 
   test("whiten: whitened covariance is the identity; covariance matches direct") {
@@ -396,7 +421,7 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val searcher = new Searcher(spark, store)
     val p = Searcher.Params(k = 5, threshold = -1.0)
-    val hits = searcher.searchHnsw("hnswdb", "doc query text", p, ef = 60)
+    val hits = searcher.search("hnswdb", "doc query text", p, Searcher.Hnsw(ef = 60))
       .collect()
     assert(hits.length == 5)
     // parity with the exact scan over the same stored vectors: the stub
@@ -412,11 +437,11 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = hits.map(_.getAs[Long]("id")).toSet
     assert((got & exact).size >= 4, s"hnsw $got vs exact $exact")
 
-    // batched facade: searchHnswMany's per-query rows equal the single
-    // path's (one shared descent, same contract as the other Many paths)
-    val many = searcher.searchHnswMany("hnswdb",
+    // a batch's per-query rows equal the single query's (one shared
+    // descent for the whole batch)
+    val many = searcher.search("hnswdb",
       Seq("qa" -> "doc query text", "qb" -> "another different query"),
-      p, ef = 60).collect()
+      p, Searcher.Hnsw(ef = 60)).collect()
     val qa = many.filter(_.getAs[String]("query_id") == "qa")
       .map(r => (r.getAs[Long]("id"), r.getAs[Double]("similarity_score")))
       .toSeq.sortBy(_._1)
@@ -451,20 +476,21 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val searcher = new Searcher(spark, store)
     val p = Searcher.Params(k = 5, threshold = -1.0)
-    val hits = searcher.searchIvf("ivfdb", "doc query text", p, nprobe = 2)
+    val hits = searcher.search("ivfdb", "doc query text", p, Searcher.Ivf(nprobe = 2))
     val n = hits.count()
     assert(n > 0 && n <= 5)
-    val plan = searcher.searchIvf("ivfdb", "doc query text", p, nprobe = 1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("cluster")) // partition filter present
+    // pruning: probing one of the 8 clusters reads fewer rows than the table
+    val table = store.vectors("ivfdb").count()
+    val one = rowsRead(searcher.search("ivfdb", "doc query text", p,
+      Searcher.Ivf(nprobe = 1)).collect())
+    assert(one > 0 && one < table, s"read $one of $table rows")
 
     // batched IVF search agrees with the one-query path per query, and
-    // the single pruned scan still carries the cluster partition filter
-    val many = searcher.searchManyIvf("ivfdb",
-      Seq("a" -> "doc query text", "b" -> "other words entirely"), p,
-      nprobe = 2)
-    assert(many.queryExecution.executedPlan.toString.contains("cluster"))
-    val rows = many.collect()
+    // its one scan is pruned to the union of the probed clusters
+    val queries = Seq("a" -> "doc query text", "b" -> "other words entirely")
+    val pair = rowsRead(searcher.search("ivfdb", queries, p, Searcher.Ivf(nprobe = 1)).collect())
+    assert(pair > 0 && pair < table, s"read $pair of $table rows")
+    val rows = searcher.search("ivfdb", queries, p, Searcher.Ivf(nprobe = 2)).collect()
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("id"), r.getAs[Double]("similarity_score"))
     val aHits = rows.filter(_.getAs[String]("query_id") == "a").map(key).sortBy(_._1)
@@ -491,18 +517,19 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val searcher = new Searcher(spark, store)
     val p = Searcher.Params(k = 10, threshold = -1.0)
-    val all = searcher.searchIvf("ivff", "doc query text", p, nprobe = 2)
+    val ivf = Searcher.Ivf(nprobe = 2)
+    val all = searcher.search("ivff", "doc query text", p, ivf)
       .select("id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
     assert(all.exists(_._2.endsWith("odd")) && all.exists(_._2.endsWith("Even")))
     // case-insensitive containment over the same top-k: the even hits of
     // the unfiltered result, never refilled from below
-    val even = searcher.searchIvf("ivff", "doc query text",
-      p.copy(searchTerm = Some("even")), nprobe = 2)
+    val even = searcher.search("ivff", "doc query text",
+      p.copy(searchTerm = Some("even")), ivf)
       .select("id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
     assert(even.nonEmpty && even.forall(_._2.endsWith("Even")))
     assert(even == all.filter(_._2.endsWith("Even")))
-    assert(searcher.searchIvf("ivff", "doc query text",
-      p.copy(documentTypeFilter = Some("image")), nprobe = 2).count() == 0)
+    assert(searcher.search("ivff", "doc query text",
+      p.copy(documentTypeFilter = Some("image")), ivf).count() == 0)
   }
 
   test("PQ store: codes-only candidate scan matches ivfPqTopK ranking") {
@@ -533,20 +560,26 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // same frame (identical training inputs -> identical codebooks/tables);
     // sampleFraction 100 both sides pins the Lloyd sample
     val searcher = new Searcher(spark, store)
-    val p = Searcher.Params(k = 5, threshold = -1.0)
-    val hits = searcher.searchPq("pqdb", "doc query text", p, nprobe = 8)
-    val got = hits.collect().map(_.getAs[Long]("id")).toSeq
-    val qvec = p.embedder.embed(
+    val qvec = Searcher.Params().embedder.embed(
       graft.expr.TextNorm.normalizeQuery("doc query text"))
-    val expect = graft.ops.Pq.ivfPqTopK(emb, col("vec_id"), col("embedding"),
-        qvec, k = 5, nlist = 8, nprobe = 8, m = 4, ksub = 8, iters = 2,
-        sampleFraction = 100)
-      .collect().map(_.getLong(0)).toSeq
-    // same candidate set; display order may differ from dist order only
-    // when scores clip at 0, so compare id-sorted
-    assert(got.sorted == expect.sorted, s"store=$got adhoc=$expect")
-    // phase 2 carried text/metadata through
-    assert(hits.collect().forall(r =>
-      r.getAs[String]("text").startsWith("doc ")))
+    // at k >= 50 the search verifies exactly the k candidates the codes rank
+    // best and returns them all (threshold -1), so the store's candidate
+    // stage is what this pins; k = 100 also returns more than 50 hits
+    for (k <- Seq(50, 100)) {
+      val hits = searcher.search("pqdb", "doc query text",
+        Searcher.Params(k = k, threshold = -1.0), Searcher.Pq(nprobe = 8))
+        .collect()
+      val got = hits.map(_.getAs[Long]("id")).toSeq
+      val expect = graft.ops.Pq.ivfPqTopK(emb, col("vec_id"), col("embedding"),
+          qvec, k = k, nlist = 8, nprobe = 8, m = 4, ksub = 8, iters = 2,
+          sampleFraction = 100)
+        .collect().map(_.getLong(0)).toSeq
+      // same candidate set; the hits are ordered by the exact similarity,
+      // the candidates by their ADC distance, so compare id-sorted
+      assert(got.length == k && got.sorted == expect.sorted,
+        s"k=$k store=$got adhoc=$expect")
+      // phase 2 carried text/metadata through
+      assert(hits.forall(r => r.getAs[String]("text").startsWith("doc ")))
+    }
   }
 }

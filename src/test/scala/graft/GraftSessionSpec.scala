@@ -61,6 +61,11 @@ class GraftSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hits.forall(h => h.similarity_score >= 0.0 && h.similarity_score <= 1.0))
     assert(hits.forall(h => math.abs(h.distance - (1.0 - h.similarity_score)) < 1e-9))
     assert(hits.head.metadata.file_name == "a.txt") // the vector-y doc wins
+    // any index through the same typed search: a full-rerank quantized
+    // search verifies every row, so it returns the FLAT hits
+    sess.store.writeVectorsQuantized("tdb")
+    assert(sess.search("tdb", "cosine vector search", Searcher.Params(k = 3, threshold = 0.0),
+      Searcher.Quantized("sq8", rerank = 10000)).collect().toSeq == hits)
   }
 
   test("creation_date records the file's own stat (S-metadata fidelity)") {

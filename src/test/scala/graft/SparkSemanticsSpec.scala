@@ -133,6 +133,35 @@ class SparkSemanticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gen.map(_.getString(0)).toSeq == Seq("abcd", "efgh"))
   }
 
+  test("ingest sinks: skip counters, metadata tables, catalog entry, context blocks") {
+    val dir = Files.createTempDirectory("graft-sinks").toString
+    def put(name: String, content: String): Unit =
+      Files.write(Paths.get(dir, name), content.getBytes(StandardCharsets.UTF_8))
+    put("notes.txt", "vector search over parquet files " * 20)
+    put("blank.txt", "   \n\t  ")
+    put("skipme.xyz", "unsupported extension")
+    val cfg = IngestJob.Config(chunkSize = 200, chunkOverlap = 100)
+    val res = IngestJob.run(spark, dir, s"$work/warehouse", "sinkdb", cfg)
+    // F1: `.xyz` never matches; F2/A7: the blank file matches, is dropped
+    // and counted
+    assert(res.filesMatched == 2 && res.filesSkipped == 1 && res.documents == 1)
+    val docs = store.documents("sinkdb").collect()
+    assert(docs.length == 1 && docs.head.getAs[String]("file_name") == "notes.txt")
+    val map = store.chunkDocMap("sinkdb").collect()
+    assert(map.length == res.chunks && res.chunks > 1)
+    assert(map.forall(_.getAs[String]("hash") == docs.head.getAs[String]("hash")))
+    assert(store.indexMetadata("sinkdb").num_vectors == res.chunks)
+    // S18/J3: the catalog entry round-trips beside the other databases
+    assert(store.catalog("sinkdb") ==
+      graft.model.DatabaseInfo(cfg.model, cfg.chunkSize, cfg.chunkOverlap))
+    assert(store.catalog.contains("specdb"))
+    // O10: numbered banner blocks of cleaned contexts
+    val blocks = graft.format.ContextFormatter.formatBlocks(
+      Seq("a\n  \n\n\nb" -> "x.txt", "c" -> null))
+    assert(blocks.contains("CONTEXT 1 | x.txt") && blocks.contains("CONTEXT 2 | Unknown"))
+    assert(blocks.contains("a\n\nb\n") && !blocks.contains("a\n  "))
+  }
+
   test("searchMany: batched queries match per-query search") {
     val batch = searcher.searchMany("specdb",
       Seq("qa" -> "cosine vector embeddings", "qb" -> "whisk eggs sugar"),
@@ -673,13 +702,13 @@ class SparkSemanticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val exact = searcher.search("specdb", "cosine similarity vector", params(k = 4))
       .collect().map(_.getLong(0)).toSeq
     for (mode <- Seq("sq8", "binary")) {
-      val got = searcher.searchQuantized("specdb", "cosine similarity vector",
-          params(k = 4), mode = mode, rerank = 10000)
+      val got = searcher.search("specdb", "cosine similarity vector",
+          params(k = 4), Searcher.Quantized(mode, rerank = 10000))
         .collect().map(_.getLong(0)).toSeq
       assert(got == exact, s"mode $mode")
     }
     intercept[IllegalArgumentException] {
-      searcher.searchQuantized("specdb", "x", params(), mode = "nope")
+      searcher.search("specdb", "x", params(), Searcher.Quantized(mode = "nope"))
     }
   }
 

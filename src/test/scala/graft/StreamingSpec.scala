@@ -118,8 +118,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.indexMetadata("ivfs").index_type == "IVF")
     // searchable through the pruned IVF path
     val searcher = new graft.query.Searcher(spark, store)
-    val hits = searcher.searchIvf("ivfs", "streamed document",
-      Searcher.Params(k = 3, threshold = -1.0), nprobe = 4)
+    val hits = searcher.search("ivfs", "streamed document",
+      Searcher.Params(k = 3, threshold = -1.0), Searcher.Ivf(nprobe = 4))
     assert(hits.count() > 0)
   }
 
@@ -156,8 +156,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(edges.filter(col("rnk") > 4).count() == 0)
     // the appended content is reachable through the beam search
     val searcher = new graft.query.Searcher(spark, store)
-    val hits = searcher.searchHnsw("hdb", "streamed document navigable",
-      Searcher.Params(k = 3, threshold = -1.0), ef = 30)
+    val hits = searcher.search("hdb", "streamed document navigable",
+      Searcher.Params(k = 3, threshold = -1.0), Searcher.Hnsw(ef = 30))
     assert(hits.count() == 3)
   }
 
