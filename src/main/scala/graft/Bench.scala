@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -80,9 +81,8 @@ object Bench {
     // taskSec inside the baseline band is ambient cadence amplification
     // (scheduler gaps on a loaded host), not a regression — the rule
     // lives in MEASUREMENT.md. Counters are per-query totals over all
-    // reps divided by reps (the listener bus is async; one settle sleep
-    // per query bounds cross-query bleed without JobProbe's per-rep
-    // sleeps, which would add minutes to the full suite).
+    // reps divided by reps, read on a drained listener bus, so no
+    // query's late events land on the next one.
     val jobsCtr = new AtomicInteger(0)
     val taskMs = new AtomicLong(0L)
     // CPU time next to elapsed task time (round-14 verdict ask #1): a
@@ -116,7 +116,7 @@ object Bench {
     }
     val results = selected.map { case (name, fn) =>
       var lastDf: org.apache.spark.sql.DataFrame = null
-      Thread.sleep(120) // settle the async listener bus between queries
+      GraftBus.drain(spark.sparkContext)
       jobsCtr.set(0); taskMs.set(0); cpuNs.set(0)
       val wall0 = System.currentTimeMillis() / 1000.0
       val times = (1 to reps).map { _ =>
@@ -125,7 +125,7 @@ object Bench {
         sec
       }.sorted
       val wall1 = System.currentTimeMillis() / 1000.0
-      Thread.sleep(120)
+      GraftBus.drain(spark.sparkContext)
       val taskSec = taskMs.get / 1e3 / reps
       val cpuSec = cpuNs.get / 1e9 / reps
       val jobsPerRep = jobsCtr.get.toDouble / reps
@@ -167,7 +167,6 @@ object Bench {
       else timed.filter { case (n, t) =>
         base.get(n).exists(b => b > 0.05 && t > 2.0 * b)
       }.map { case (n, _) =>
-        Thread.sleep(120)
         val (sec, _) = runOnce(n, selected.toMap.apply(n))
         (n, sec)
       }

@@ -794,7 +794,9 @@ object Ann {
     * adjacent cells) and joins cell-to-cell, so candidate generation is
     * density-bounded, never the all-pairs cross. Components resolve by
     * the path-halving min-label loop ([[Dedup.duplicateClusters]] —
-    * O(log diameter) rounds of int-only joins).
+    * O(log diameter) rounds of int-only joins); components still
+    * merging after `maxIters` rounds throw an `IllegalStateException`
+    * naming `duplicateClusters` and the cap.
     *
     * Memory contract: the pair pass materializes Σ_cell k·K₃ₓ₃
     * candidate rows (~64 B each) through one shuffle — the quantity

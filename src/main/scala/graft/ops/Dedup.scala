@@ -292,13 +292,16 @@ object Dedup {
     * of (node, label) longs, never the text; (2) path halving — labels
     * relabel through the label TABLE itself (`lbl(x) := lbl(lbl(x))`), the
     * pointer-jumping step that turns O(diameter) rounds into
-    * O(log diameter). Every round's frame is `localCheckpoint`ed EAGERLY:
+    * O(log diameter). Every round's frame is checkpointed EAGERLY:
     * an iterative plan that merely caches still grows its logical plan by
     * two joins per round, and by round ~10 the driver spends more time in
     * the optimizer than the executors spend in the (tiny) jobs — lineage
     * truncation keeps re-planning O(1) per round and doubles as the
-    * convergence action. `maxIters` hard-caps pathological graphs. Output:
-    * `(id, cluster_id)`, one lineage-free row per node in `pairs`.
+    * convergence action ([[Rounds]]). Labels still moving after
+    * `maxIters` rounds are not components: that throws an
+    * `IllegalStateException` naming `duplicateClusters` and the cap.
+    * Output: `(id, cluster_id)`, one lineage-free row per node in
+    * `pairs`.
     */
   def duplicateClusters(pairs: DataFrame, aCol: Column, bCol: Column,
       maxIters: Int = 20): DataFrame = {
@@ -313,7 +316,7 @@ object Dedup {
     // rides each round's checkpoint job. Decimal(38,0) so arbitrary
     // Long ids cannot wrap.
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val (labels, _) = Rounds.untilStable(
+    val labels = Rounds.untilStable("duplicateClusters",
         edges.select(col("src").as("id")).distinct().withColumn("lbl", col("id")),
         maxIters,
         Some(coalesce(sum(col("lbl").cast(dec)),

@@ -23,8 +23,10 @@ import org.apache.spark.sql.functions._
  * (MEASUREMENT.md #11) and each round's join exchanges both sides —
  * then one partial-agg-friendly integer sum by `dst`. Each round
  * checkpoints eagerly so the plan stays O(1) deep regardless of
- * iteration count (the [[Dedup.duplicateClusters]] discipline); the
- * iterative operators checkpoint through [[Rounds]].
+ * iteration count (the [[Dedup.duplicateClusters]] discipline). Every
+ * loop round checkpoints through [[Rounds]]: fixed-round loops through
+ * [[Rounds.repeat]], fixpoint loops through [[Rounds.untilStable]],
+ * whose cap fails loudly — no operator returns a truncated fixpoint.
  */
 object Graph {
 
@@ -38,38 +40,12 @@ object Graph {
     * src ∪ dst of the edge list; mass through dangling nodes (in-edges
     * only) leaks, the classic simplified SQL formulation — ranks still
     * order centrality, they just don't sum to |V|. Returns
-    * `(id, rank_micro)`. */
+    * `(id, rank_micro)`. This is [[pageRankWeighted]] at w ≡ 1: with
+    * unit weights `sw(u)` is the out-degree, so the two agree
+    * bit-for-bit. */
   def pageRank(edges: DataFrame, srcCol: Column, dstCol: Column,
-      iters: Int = 3, dampingPct: Int = 85): DataFrame = {
-    require(iters >= 1, "need at least one iteration")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
-    // materialize the edge list FIRST: it may be the output of an
-    // expensive upstream (a kNN graph build), and it is read three ways
-    // below (out-degrees, node set, per-iteration join) — without this
-    // checkpoint each of those re-runs the upstream plan
-    val e = edges.select(srcCol.cast("long").as("src"),
-      dstCol.cast("long").as("dst"))
-      .localCheckpoint(eager = true)
-    // static across iterations: the edge list with its source's out-degree
-    val ew = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .localCheckpoint(eager = true)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = true)
-    val base = (100L - dampingPct) * 1000000L / 100L
-    var ranks = nodes.select(col("id"), lit(1000000L).as("rank_micro"))
-    for (_ <- 1 to iters) {
-      val sums = ew.join(ranks, ew("src") === ranks("id"))
-        .select(col("dst"), expr("rank_micro div outdeg").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = nodes.join(sums, nodes("id") === sums("dst"), "left")
-        .select(nodes("id"),
-          (lit(base) + expr(s"coalesce(s, cast(0 as bigint)) * $dampingPct div 100"))
-            .as("rank_micro"))
-        .localCheckpoint(eager = true)
-    }
-    ranks
-  }
+      iters: Int = 3, dampingPct: Int = 85): DataFrame =
+    pageRankWeighted(edges, srcCol, dstCol, lit(1L), iters, dampingPct)
 
   /** WEIGHTED damped PageRank — [[pageRank]] with each vote split
     * PROPORTIONAL to integer edge weight instead of evenly:
@@ -98,22 +74,26 @@ object Graph {
       .union(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(eager = true)
     val base = (100L - dampingPct) * 1000000L / 100L
-    // stats-reset round checkpoints ([[Rounds]]): one join of the
-    // prior checkpoint per round grows carried sizeInBytes digits
-    // linearly — harmless at iters = 3, but user-supplied large iters
-    // would still bloat the BigInt stats products (advisor, round 12)
-    var ranks = nodes.select(col("id"), lit(1000000L).as("rank_micro"))
-    for (_ <- 1 to iters) {
-      val sums = ew.join(ranks, ew("src") === ranks("id"))
-        .select(col("dst"), expr("rank_micro * w div sw").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = Rounds.checkpoint(nodes
-        .join(sums, nodes("id") === sums("dst"), "left")
-        .select(nodes("id"),
-          (lit(base) + expr(s"coalesce(s, cast(0 as bigint)) * $dampingPct div 100"))
-            .as("rank_micro"))).frame
-    }
-    ranks
+    Rounds.repeat(nodes.select(col("id"), lit(1000000L).as("rank_micro")),
+        iters)(powerStep(ew, nodes, "rank_micro * w div sw",
+      s"$base + s * $dampingPct div 100", "rank_micro"))
+  }
+
+  /** One round of the PageRank family's power iteration (PageRank,
+    * personalized PageRank, Katz): every edge `(src, dst, …)` of
+    * `edges` carries `contrib` (SQL over the edge's columns and the
+    * source's score row) to `dst`, contributions sum exactly per node,
+    * and `update` (SQL over `nodes`' columns and `s`, the node's sum,
+    * 0 when nothing arrives) is the node's new score `out`. */
+  private def powerStep(edges: DataFrame, nodes: DataFrame,
+      contrib: String, update: String, out: String)(scores: DataFrame)
+      : DataFrame = {
+    val sums = edges.join(scores, edges("src") === scores("id"))
+      .select(col("dst"), expr(contrib).as("c"))
+      .groupBy("dst").agg(sum("c").as("s"))
+    nodes.join(sums, nodes("id") === sums("dst"), "left")
+      .withColumn("s", coalesce(col("s"), lit(0L)))
+      .select(col("id"), expr(update).as(out))
   }
 
   /** WEIGHTED k-core — [[kCore]] with the peel threshold on the
@@ -123,7 +103,9 @@ object Graph {
     * one-off pairs). Parallel edges sum on entry; same
     * peel-to-fixpoint loop, count-compare termination riding each
     * round's checkpoint. Returns `(id, core_weight)` for the maximal
-    * subgraph where every node keeps Σw ≥ k. */
+    * subgraph where every node keeps Σw ≥ k; a peel still moving after
+    * `maxIters` rounds throws an `IllegalStateException` naming
+    * `kCoreWeighted` and the cap. */
   def kCoreWeighted(edges: DataFrame, srcCol: Column, dstCol: Column,
       weightCol: Column, k: Long, maxIters: Int = 50): DataFrame = {
     require(k >= 1, "kCoreWeighted: k must be >= 1")
@@ -136,7 +118,7 @@ object Graph {
       .groupBy("id").agg(sum("w").as("wdeg"))
     // peel until no edge leaves: the edge count rides each round's
     // checkpoint job
-    val (e, _) = Rounds.untilStable(raw
+    val e = Rounds.untilStable("kCoreWeighted", raw
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"), col("w"))
         .groupBy("a", "b").agg(sum("w").as("w")), maxIters) { cur =>
@@ -202,7 +184,7 @@ object Graph {
         .select(col("id"), lit(depth).as("dist")))
       frontierSize = next.rows
       if (frontierSize > 0)
-        visited = visited.unionAll(next.frame).localCheckpoint(true)
+        visited = Rounds.checkpoint(visited.unionAll(next.frame)).frame
       frontier = next.frame.select(col("id"))
     }
     visited
@@ -237,32 +219,31 @@ object Graph {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
-    var scores = nodes.select(col("id"), lit(1000000L).as("h"),
+    val init = nodes.select(col("id"), lit(1000000L).as("h"),
       lit(1000000L).as("a"))
-    for (_ <- 1 to iters) {
+    val scores = Rounds.repeat(init, iters) { scores =>
       // authorities from hub mass along the edge direction
       val aRaw = e.join(scores.select(col("id"), col("h")),
           e("src") === col("id"))
         .groupBy("dst").agg(sum("h").as("ar"))
       val aTop = aRaw.agg(max("ar").as("am"))
-      val withA = nodes
+      val withA = Rounds.checkpoint(nodes
         .join(aRaw, nodes("id") === aRaw("dst"), "left")
         .crossJoin(broadcast(aTop))
         .select(nodes("id"),
-          coalesce(expr("ar * cast(1000000 as bigint) div am"), lit(0L)).as("a"))
-        .localCheckpoint(true)
+          coalesce(expr("ar * cast(1000000 as bigint) div am"), lit(0L))
+            .as("a"))).frame
       // hubs from the fresh authority mass against the direction
       val hRaw = e.join(withA.select(col("id"), col("a")),
           e("dst") === col("id"))
         .groupBy("src").agg(sum("a").as("hr"))
       val hTop = hRaw.agg(max("hr").as("hm"))
-      scores = withA
+      withA
         .join(hRaw, withA("id") === hRaw("src"), "left")
         .crossJoin(broadcast(hTop))
         .select(withA("id"),
           coalesce(expr("hr * cast(1000000 as bigint) div hm"), lit(0L)).as("h"),
           col("a"))
-        .localCheckpoint(true)
     }
     scores.select(col("id"), col("h").as("hub_micro"),
       col("a").as("auth_micro"))
@@ -310,9 +291,8 @@ object Graph {
     // shape re-joined `nodes` every round just to recover seed_lbl —
     // one |V| equi-join per round gone; row set and clamp semantics
     // identical (lbl's id set IS nodes' id set, both static)
-    var lbl = Rounds.checkpoint(nodes.select(col("id"), col("seed_lbl"),
-      col("seed_lbl").as("lbl"))).frame
-    for (_ <- 1 to iters) {
+    val lbl = Rounds.repeat(nodes.select(col("id"), col("seed_lbl"),
+        col("seed_lbl").as("lbl")), iters) { lbl =>
       val votes = adj.join(
           lbl.filter(col("lbl").isNotNull)
             .select(col("id").as("t"), col("lbl")), Seq("t"))
@@ -325,10 +305,10 @@ object Graph {
       val winner = votes.groupBy("id")
         .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("wp"))
         .select(col("id"), col("wp.lbl").as("win"))
-      lbl = Rounds.checkpoint(lbl
+      lbl
         .join(winner, Seq("id"), "left")
         .select(col("id"), col("seed_lbl"),
-          coalesce(col("seed_lbl"), col("win"), col("lbl")).as("lbl"))).frame
+          coalesce(col("seed_lbl"), col("win"), col("lbl")).as("lbl"))
     }
     lbl.filter(col("lbl").isNotNull).select(col("id"), col("lbl").as("label"))
   }
@@ -785,7 +765,9 @@ object Graph {
     * shuffles, stats-reset checkpoints, never a per-pair fan-out.
     * Nodes without an intra-community edge keep their own id as a
     * singleton label. Output `(id, community)` for every node of
-    * `assign`. */
+    * `assign`. Components still merging after `maxIters` rounds throw
+    * an `IllegalStateException` naming `duplicateClusters` and the
+    * cap. */
   def refineConnectivity(edges: DataFrame, srcCol: Column,
       dstCol: Column, assign: DataFrame, nodeCol: Column,
       commCol: Column, maxIters: Int = 20): DataFrame = {
@@ -977,9 +959,10 @@ object Graph {
     * edge frame checkpointed every round so the plan stays O(1)
     * deep (the [[pageRank]] discipline). Rounds are data-dependent but
     * short in practice (each round must delete ≥ 1 node to continue,
-    * and real graphs cascade in a handful); `maxIters` bounds the
-    * driver loop, and the fixpoint test rides the checkpoint's
-    * materialization — no extra pass over the edges. */
+    * and real graphs cascade in a handful); the fixpoint test rides
+    * the checkpoint's materialization — no extra pass over the edges.
+    * A peel still moving after `maxIters` rounds is not a k-core: it
+    * throws an `IllegalStateException` naming `kCore` and the cap. */
   def kCore(edges: DataFrame, srcCol: Column, dstCol: Column, k: Int,
       maxIters: Int = 50): DataFrame = {
     require(k >= 1, "kCore: k must be >= 1")
@@ -991,7 +974,7 @@ object Graph {
       .unionAll(ed.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
     // stable edge count = no edge left the graph: every node is >= k
-    val (e, _) = Rounds.untilStable(raw
+    val e = Rounds.untilStable("kCore", raw
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"))
         .distinct(), maxIters) { cur =>
@@ -1047,8 +1030,9 @@ object Graph {
     * [[triangleStats]] degree-orientation discipline (oriented
     * out-degree O(√|E|), wedge join never explodes on hubs), each
     * triangle explodes to its 3 canonical edges, one grouped count =
-    * support; all joins are int equi-joins. Rounds are
-    * fixpoint-bounded with a `maxIters` backstop. */
+    * support; all joins are int equi-joins. Rounds run to the
+    * fixpoint; a peel still moving after `maxIters` rounds throws an
+    * `IllegalStateException` naming `kTruss` and the cap. */
   def kTruss(edges: DataFrame, srcCol: Column, dstCol: Column, k: Int,
       maxIters: Int = 50, broadcastClosing: Boolean = false): DataFrame = {
     require(k >= 2, "kTruss: k must be >= 2")
@@ -1061,16 +1045,16 @@ object Graph {
     // checkpoint, so carried sizeInBytes would compound geometrically
     // (the louvainRounds lesson). `sup` is the support of the last
     // round's input: at the fixpoint its edge set is the output's, so
-    // it is reused; an empty or capped result gets its own support.
+    // it is reused; an empty input runs no round and gets its own.
     var sup: DataFrame = null
-    val (e, converged) = Rounds.untilStable(raw
+    val e = Rounds.untilStable("kTruss", raw
         .select(least(col("a"), col("b")).as("a"),
           greatest(col("a"), col("b")).as("b"))
         .distinct(), maxIters) { cur =>
       sup = edgeSupport(cur, broadcastClosing)
       sup.filter(col("support") >= k - 2).select(col("a"), col("b"))
     }
-    if (!converged || sup == null) sup = edgeSupport(e, broadcastClosing)
+    if (sup == null) sup = edgeSupport(e, broadcastClosing)
     sup.filter(col("support") >= k - 2)
   }
 
@@ -1147,26 +1131,25 @@ object Graph {
     require(e.filter(col("w") < 0).isEmpty,
       "ssspBellmanFord: negative edge weights are unsupported " +
         "(rounds-bounded relaxation would truncate genuine paths)")
-    var v = sources.select(sourceIdCol.cast("long").as("id")).distinct()
-      .withColumn("dist", lit(0.0))
-      .localCheckpoint(true)
-    var i = 0
-    var done = false
-    while (i < rounds && !done) {
-      val relax = v.join(e, v("id") === e("s"))
-        .select(e("t").as("id"), (v("dist") + e("w")).as("dist"))
-      val next = v.unionByName(relax)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
-      // the convergence probe is itself a job — skip it on the final
-      // round, where its answer cannot change the loop
-      done = i < rounds - 1 && next
-        .join(v.withColumnRenamed("dist", "prev"), Seq("id"), "left")
-        .filter(col("prev").isNull || col("dist") < col("prev"))
-        .isEmpty
-      v = next
-      i += 1
+    // a round keeps each old row's distance as `prev`, so a node
+    // improved iff it is new (no prev) or its distance dropped; the
+    // count of improved nodes rides the round's checkpoint job
+    val improved = Some(coalesce(sum(when(col("prev").isNull ||
+      col("dist") < col("prev"), 1L).otherwise(0L)), lit(0L)))
+    @annotation.tailrec
+    def relax(v: DataFrame, r: Int): DataFrame = {
+      val next = Rounds.checkpoint(v
+        .select(col("id"), col("dist"), col("dist").as("prev"))
+        .unionByName(v.join(e, v("id") === e("s")).select(e("t").as("id"),
+          (v("dist") + e("w")).as("dist"), lit(null).cast("double").as("prev")))
+        .groupBy("id").agg(min("dist").as("dist"), min("prev").as("prev")),
+        improved)
+      if (r == rounds || next.observed == 0L) next.frame
+      else relax(next.frame.select(col("id"), col("dist")), r + 1)
     }
+    val v = relax(Rounds.checkpoint(sources
+      .select(sourceIdCol.cast("long").as("id")).distinct()
+      .withColumn("dist", lit(0.0))).frame, 1)
     v.select(col("id"), round(col("dist"), 4).as("dist"))
   }
 
@@ -1203,20 +1186,11 @@ object Graph {
       .select(col("id"), coalesce(col("__s"), lit(0)).as("is_seed"))
       .localCheckpoint(eager = true)
     val base = (100L - dampingPct) * 1000000L / 100L
-    var ranks = withSeed.select(col("id"),
-      (col("is_seed").cast("long") * 1000000L).as("ppr_micro"))
-    for (_ <- 1 to iters) {
-      val sums = ew.join(ranks, ew("src") === ranks("id"))
-        .select(col("dst"), expr("ppr_micro div outdeg").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      ranks = withSeed.join(sums, withSeed("id") === sums("dst"), "left")
-        .select(withSeed("id"),
-          (col("is_seed").cast("long") * base + expr(
-            s"coalesce(s, cast(0 as bigint)) * $dampingPct div 100"))
-            .as("ppr_micro"))
-        .localCheckpoint(eager = true)
-    }
-    ranks
+    Rounds.repeat(withSeed.select(col("id"),
+        (col("is_seed").cast("long") * 1000000L).as("ppr_micro")), iters)(
+      powerStep(ew, withSeed, "ppr_micro div outdeg",
+        s"cast(is_seed as bigint) * $base + s * $dampingPct div 100",
+        "ppr_micro"))
   }
 
   /** Truncated Katz centrality over a DIRECTED edge list in
@@ -1248,18 +1222,9 @@ object Graph {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
-    var x = nodes.select(col("id"), lit(1000000L).as("katz_micro"))
-    for (_ <- 1 to iters) {
-      val sums = e.join(x, e("src") === x("id"))
-        .groupBy("dst").agg(sum("katz_micro").as("s"))
-      x = nodes.join(sums, nodes("id") === sums("dst"), "left")
-        .select(nodes("id"),
-          (lit(1000000L) + expr(
-            s"coalesce(s, cast(0 as bigint)) * $alphaPct div 100"))
-            .as("katz_micro"))
-        .localCheckpoint(true)
-    }
-    x
+    Rounds.repeat(nodes.select(col("id"), lit(1000000L).as("katz_micro")),
+        iters)(powerStep(e, nodes, "katz_micro",
+      s"1000000 + s * $alphaPct div 100", "katz_micro"))
   }
 
   /** Pivot-sampled betweenness centrality (Brandes 2001 accumulation
@@ -1610,20 +1575,18 @@ object Graph {
       .distinct()
     val adj = Rounds.checkpoint(und.select(col("a").as("s"), col("b").as("t"))
       .unionAll(und.select(col("b").as("s"), col("a").as("t")))).frame
-    var est = Rounds.checkpoint(adj.groupBy("s").agg(count(lit(1)).as("est"))
-      .select(col("s").as("id"), col("est"))).frame
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("s").orderBy(col("nEst").desc, col("t"))
-    for (_ <- 1 to rounds) {
-      est = Rounds.checkpoint(adj
+    Rounds.repeat(adj.groupBy("s").agg(count(lit(1)).as("est"))
+        .select(col("s").as("id"), col("est")), rounds) { est =>
+      adj
         .join(est.select(col("id").as("t"), col("est").as("nEst")),
           Seq("t"))
         .withColumn("rn", row_number().over(w))
         .select(col("s"), least(col("nEst"), col("rn")).as("cand"))
         .groupBy("s").agg(max("cand").as("est"))
-        .select(col("s").as("id"), col("est"))).frame
-    }
-    est.select(col("id"), col("est").as("core"))
+        .select(col("s").as("id"), col("est"))
+    }.select(col("id"), col("est").as("core"))
   }
 
   /** TOPOLOGICAL layers of a DIRECTED acyclic graph — `layer(v)` = the
@@ -1634,16 +1597,18 @@ object Graph {
     * family's max twin). The scheduling readout for dependency DAGs —
     * pipeline stages, derivation lineage, layered crawl frontiers:
     * nodes in the same layer are mutually independent and can run
-    * together. CYCLES FAIL FAST: after `rounds` rounds the op runs
-    * ONE extra relaxation and requires it changes nothing — a node on
-    * a cycle keeps climbing forever, so "converged" is the acyclicity
-    * certificate and an under-provisioned `rounds` on a deep DAG is
-    * loud, never a silently-wrong layer. Output `(id, layer)`.
+    * together. CYCLES FAIL FAST: the relaxation runs until a round
+    * changes nothing, for at most `rounds + 1` rounds — a node on a
+    * cycle keeps climbing forever, so that unchanged round is the
+    * acyclicity certificate. A cycle, or a DAG deeper than `rounds`,
+    * throws an `IllegalStateException` naming `topoLayers` and the cap
+    * (`rounds + 1`), never a silently-wrong layer. Output
+    * `(id, layer)`.
     *
     * Scale shape (per round): one equi-join of the |V| layer frame
     * against the static checkpointed edge list + one grouped max —
-    * integer shuffles, stats-reset checkpoints; `rounds` must be ≥
-    * the DAG depth (the convergence check makes violations loud). */
+    * integer shuffles, stats-reset checkpoints; the rounds after
+    * convergence are never run. */
   def topoLayers(edges: DataFrame, srcCol: Column, dstCol: Column,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "topoLayers: rounds must be >= 1")
@@ -1652,9 +1617,14 @@ object Graph {
       .filter(col("s") =!= col("t")).distinct()).frame
     val nodes = e.select(col("s").as("id"))
       .unionAll(e.select(col("t").as("id"))).distinct()
-    var layer = Rounds.checkpoint(
-      nodes.select(col("id"), lit(0L).as("layer"))).frame
-    def relaxed(l: DataFrame): DataFrame =
+    // a round takes greatest(layer, …) over the same node set, so
+    // layers are elementwise non-decreasing and Σlayer is unchanged IFF
+    // a round moved nothing: the monotone Σ rides each round's
+    // checkpoint, and the round after the last change is the
+    // acyclicity certificate — hence the cap of `rounds + 1`
+    Rounds.untilStable("topoLayers",
+        nodes.select(col("id"), lit(0L).as("layer")), rounds + 1,
+        Some(coalesce(sum(col("layer")), lit(0L)))) { l =>
       l.join(e.join(l.select(col("id").as("s"),
             (col("layer") + 1L).as("cand")), Seq("s"))
           .groupBy(col("t").as("id")).agg(max("cand").as("cand")),
@@ -1662,27 +1632,7 @@ object Graph {
         .select(col("id"),
           greatest(col("layer"), coalesce(col("cand"), lit(0L)))
             .as("layer"))
-    // the acyclicity certificate via the monotone Σlayer (r16):
-    // `relaxed` takes greatest(layer, …) over the same node set, so
-    // layers are elementwise non-decreasing and Σlayer is unchanged
-    // IFF the extra relaxation moved nothing — the former shape
-    // checkpointed the extra relaxation and ran a comparison join;
-    // this is one plain aggregate job, no checkpoint, no join. The
-    // last round's Σ rides its checkpoint via observe.
-    var lastSum = 0L
-    for (_ <- 1 to rounds) {
-      val next = Rounds.checkpoint(relaxed(layer),
-        Some(coalesce(sum(col("layer")), lit(0L))))
-      layer = next.frame
-      lastSum = next.observed.asInstanceOf[Long]
     }
-    val extraSum = relaxed(layer)
-      .agg(coalesce(sum(col("layer")), lit(0L))).head().getLong(0)
-    require(extraSum == lastSum,
-      s"topoLayers: not converged after $rounds rounds — the graph " +
-        "has a cycle, or the DAG is deeper than `rounds`; raise " +
-        "rounds (the check re-fires) or break the cycle")
-    layer
   }
 
   /** STRONGLY connected components of a DIRECTED graph — the web-graph
@@ -1718,7 +1668,9 @@ object Graph {
     * so Σ strictly drops iff anything changed — no comparison join);
     * finalized nodes leave `active` and the edge list via anti-joins
     * once per phase. Rounds per phase are bounded by the active
-    * diameter (`maxRounds`, loud). */
+    * diameter: a propagation still moving after `maxRounds` rounds
+    * throws an `IllegalStateException` naming
+    * `stronglyConnectedComponents` and the cap. */
   def stronglyConnectedComponents(edges: DataFrame, srcCol: Column,
       dstCol: Column, maxPhases: Int = 10,
       maxRounds: Int = 200): DataFrame = {
@@ -1738,8 +1690,8 @@ object Graph {
     // min-label propagation over `dir` (s → t) to fixpoint; labels
     // only decrease, so Σlb strictly drops iff any row changed — the
     // Σ rides each round's checkpoint job
-    def minProp(dir: DataFrame, init: DataFrame): DataFrame = {
-      val (lb, converged) = Rounds.untilStable(init, maxRounds,
+    def minProp(dir: DataFrame, init: DataFrame): DataFrame =
+      Rounds.untilStable("stronglyConnectedComponents", init, maxRounds,
           Some(coalesce(sum(col("lb")), lit(0L)))) { cur =>
         cur.join(
             dir.join(cur.select(col("id").as("s"), col("lb").as("ls")),
@@ -1749,12 +1701,6 @@ object Graph {
           .select(col("id"),
             least(col("lb"), coalesce(col("nl"), col("lb"))).as("lb"))
       }
-      require(converged,
-        s"stronglyConnectedComponents: min propagation exceeded " +
-          s"maxRounds = $maxRounds — active diameter too large; " +
-          "raise maxRounds")
-      lb
-    }
 
     while (activeCount > 0) {
       phase += 1
@@ -1909,18 +1855,16 @@ object Graph {
     // whole accumulated pair set every round — the same bytes the
     // grouped-min pass already moves — plus an extra count job per
     // round and fragmented union scans. Reverted.
-    var dist = Rounds.checkpoint(sources
+    val init = Rounds.checkpoint(sources
       .select(sourceIdCol.cast("long").as("src"))
       .distinct()
       .select(col("src"), col("src").as("id"), lit(0L).as("dist"))).frame
-    for (_ <- 1 to maxDepth) {
+    Rounds.repeat(init, maxDepth) { dist =>
       val nxt = dist.join(adj, col("id") === col("s"))
         .select(col("src"), col("t").as("id"),
           (col("dist") + 1L).as("dist"))
-      dist = Rounds.checkpoint(dist.unionAll(nxt)
-        .groupBy("src", "id").agg(min("dist").as("dist"))).frame
-    }
-    dist.filter(col("dist") > 0)
+      dist.unionAll(nxt).groupBy("src", "id").agg(min("dist").as("dist"))
+    }.filter(col("dist") > 0)
       .groupBy("id")
       .agg(count(lit(1)).as("n_reached"),
         sum(floor(lit(1000000.0) / col("dist")).cast("long"))

@@ -3,10 +3,11 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graftshim.StatsReset
 
-/** The round primitive of the iterative operators (graph communities,
-  * cores, SCC, near-dup clustering): every loop round checkpoints
-  * through [[checkpoint]], and loops that run to a fixpoint use
-  * [[untilStable]].
+/** The round primitive of the iterative operators (graph centralities,
+  * communities, cores, SCC, near-dup clustering): every loop round
+  * checkpoints through [[checkpoint]]; a loop of a fixed number of
+  * rounds runs through [[repeat]], and a loop that runs to a fixpoint
+  * through [[untilStable]].
   *
   * A round checkpoint is eager, drops the origin statistics (the
   * compounding-BigInt lesson, see `graftshim.StatsReset`) and counts
@@ -14,6 +15,11 @@ import org.apache.spark.sql.graftshim.StatsReset
   * convergence signal — the row count or one aggregate observed on the
   * round's plan — at no extra Spark job. Under AQE the checkpoint keeps
   * no partitioning or ordering (MEASUREMENT.md #11).
+  *
+  * Cap policy: a fixpoint that has not arrived within its round cap
+  * fails loudly — [[untilStable]] throws an `IllegalStateException`
+  * naming the operator and the cap. A truncated fixpoint (a half-peeled
+  * core, a half-propagated label) is never returned as the answer.
   */
 object Rounds {
 
@@ -39,27 +45,36 @@ object Rounds {
     Checkpoint(frame, rows, value)
   }
 
+  /** Exactly `rounds` rounds of `step` from `init`, each round's output
+    * checkpointed. `init` itself is not: the first round reads it as
+    * it is, so a caller that wants it materialized checkpoints it. */
+  def repeat(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame)
+      : DataFrame =
+    (1 to rounds).foldLeft(init)((cur, _) => checkpoint(step(cur)).frame)
+
   /** Checkpoints `init`, then checkpoints `step` of the last round's
-    * frame until the round's signal repeats the previous one's, for at
-    * most `maxRounds` rounds. The signal is the `observed` aggregate
+    * frame until the round's signal repeats the previous one's, and
+    * returns that last frame. The signal is the `observed` aggregate
     * when given, else the row count; a start with no rows is already
-    * stable. Returns the last checkpointed frame and whether it
-    * converged — at the cap it is the capped frame with `false`, and
-    * what a cap means is the caller's policy. */
-  def untilStable(init: DataFrame, maxRounds: Int,
+    * stable. At most `maxRounds` steps run: if the signal still moves
+    * after the last of them, this throws an `IllegalStateException`
+    * naming `op` and the cap. */
+  def untilStable(op: String, init: DataFrame, maxRounds: Int,
       observed: Option[Column] = None)(step: DataFrame => DataFrame)
-      : (DataFrame, Boolean) = {
+      : DataFrame = {
     def signal(c: Checkpoint): Any =
       if (observed.isDefined) c.observed else c.rows
     @annotation.tailrec
-    def loop(cur: Checkpoint, round: Int): (DataFrame, Boolean) =
-      if (round >= maxRounds) (cur.frame, false)
+    def loop(cur: Checkpoint, round: Int): DataFrame =
+      if (round >= maxRounds) throw new IllegalStateException(
+        s"$op: not converged within its cap of $maxRounds rounds — " +
+          "the input needs more rounds than that, or has no fixpoint")
       else {
         val next = checkpoint(step(cur.frame), observed)
-        if (signal(next) == signal(cur)) (next.frame, true)
+        if (signal(next) == signal(cur)) next.frame
         else loop(next, round + 1)
       }
     val start = checkpoint(init, observed)
-    if (start.rows == 0L) (start.frame, true) else loop(start, 0)
+    if (start.rows == 0L) start.frame else loop(start, 0)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.GraftTestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -35,9 +35,9 @@ class ExtensionsAndClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.recordsRead))
     }
-    GraftTestBus.drain(spark.sparkContext)
+    GraftBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
-    try { f; GraftTestBus.drain(spark.sparkContext) }
+    try { f; GraftBus.drain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
     n.get()
   }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftTestBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -68,10 +68,10 @@ class SearchJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** `f`'s result and the Spark jobs it started. */
   private def counted[T](f: => T): (T, Int) = {
-    GraftTestBus.drain(spark.sparkContext)
+    GraftBus.drain(spark.sparkContext)
     val before = jobs.get()
     val out = f
-    GraftTestBus.drain(spark.sparkContext)
+    GraftBus.drain(spark.sparkContext)
     (out, jobs.get() - before)
   }
 

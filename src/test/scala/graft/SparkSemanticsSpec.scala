@@ -327,11 +327,15 @@ class SparkSemanticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
     // maxIters caps propagation: one round = neighbor-min + one path-halving
-    // hop, so the 4-chain's far end reaches its grandparent's label (2),
-    // not yet the component min (1)
-    val one = Dedup.duplicateClusters(pairs, col("a_id"), col("b_id"),
-      maxIters = 1).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(one(4L) == 2L && one(2L) == 1L && one(3L) == 1L)
+    // hop, so after one round the 4-chain's far end holds its
+    // grandparent's label (2), not yet the component min (1) — a capped
+    // run is not a clustering and fails loudly
+    val ex = intercept[IllegalStateException] {
+      Dedup.duplicateClusters(pairs, col("a_id"), col("b_id"), maxIters = 1)
+    }
+    assert(ex.getMessage.startsWith(
+      "duplicateClusters: not converged within its cap of 1 rounds"),
+      ex.getMessage)
   }
 
   test("incremental dedup equals the full run's cross slice") {

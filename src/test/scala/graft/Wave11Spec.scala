@@ -330,12 +330,12 @@ class Wave11Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L,
       5L -> 3L), got.toString)
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
-    val ex = intercept[IllegalArgumentException] {
+    val ex = intercept[IllegalStateException] {
       graft.ops.Graph.topoLayers(cyc, col("a"), col("b"), rounds = 5)
     }
     assert(ex.getMessage.contains("not converged"), ex.getMessage)
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-    val ex2 = intercept[IllegalArgumentException] {
+    val ex2 = intercept[IllegalStateException] {
       graft.ops.Graph.topoLayers(path, col("a"), col("b"), rounds = 2)
     }
     assert(ex2.getMessage.contains("not converged"), ex2.getMessage)

@@ -479,6 +479,53 @@ class Wave7Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got2.toSeq == Seq((2L, 3.0), (3L, 1.0)))
   }
 
+  test("betweennessApprox: batched multi-pivot scores equal the sum of " +
+      "per-pivot brute-force Brandes, pivots exhausting at uneven depths") {
+    import spark.implicits._
+    import graft.ops.Graph
+    // component A: a diamond 1-{2,3}-4 (σ(4) = 2 from pivot 1) with a
+    // tail 4-5-6-7; component B: a triangle 10-11-12 with a leaf 13.
+    // Pivots 1, 4, 10 (the 3 smallest candidates) exhaust at depths 5,
+    // 3 and 2.
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L), (4L, 5L),
+      (5L, 6L), (6L, 7L), (10L, 11L), (10L, 12L), (11L, 12L), (12L, 13L))
+    val pivots = Seq(1L, 4L, 10L)
+    val nbr = (edges ++ edges.map(_.swap)).groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2) }
+    // Brandes from one source: BFS levels with path counts σ, then
+    // δ(v) = Σ_{w: succ of v} σ(v)/σ(w)·(1 + δ(w)), deepest level first
+    def brandes(p: Long): Map[Long, Double] = {
+      val dist = scala.collection.mutable.Map(p -> 0)
+      val sigma = scala.collection.mutable.Map(p -> 1L)
+      var level = Seq(p)
+      val order = scala.collection.mutable.ArrayBuffer(p)
+      while (level.nonEmpty) {
+        val next = scala.collection.mutable.LinkedHashSet[Long]()
+        for (v <- level; w <- nbr(v)) {
+          if (!dist.contains(w)) { dist(w) = dist(v) + 1; next += w }
+          if (dist(w) == dist(v) + 1) sigma(w) = sigma.getOrElse(w, 0L) + sigma(v)
+        }
+        level = next.toSeq
+        order ++= level
+      }
+      val delta = scala.collection.mutable.Map[Long, Double]().withDefaultValue(0.0)
+      for (w <- order.reverse; v <- nbr(w) if dist.get(v).contains(dist(w) - 1))
+        delta(v) += sigma(v).toDouble / sigma(w) * (1.0 + delta(w))
+      delta.toMap - p
+    }
+    val want = pivots.flatMap(brandes).groupBy(_._1)
+      .map { case (v, ds) => v -> BigDecimal(ds.map(_._2).sum)
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble }
+      .filter(_._2 > 0)
+    val piv = Seq(13L, 10L, 4L, 1L).toDF("id")
+    val got = Graph.betweennessApprox(edges.toDF("a", "b"), col("a"),
+        col("b"), piv, col("id"), maxPivots = 3, maxDepth = 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got == want)
+    // the fixture exercises what it claims: uneven depths, σ > 1
+    assert(want.keySet == Set(2L, 3L, 4L, 5L, 6L, 12L), want.toString)
+  }
+
   test("personalizedPageRank: teleport mass stays on the seed") {
     import spark.implicits._
     import graft.ops.Graph
