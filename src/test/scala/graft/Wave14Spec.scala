@@ -152,8 +152,8 @@ class Wave14Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(steps === 0 && empty.isEmpty)
   }
 
-  test("Rounds.untilStable: at the cap it throws an " +
-      "IllegalStateException naming the operator and the cap") {
+  test("Rounds.untilStable: at the cap it throws, naming the operator " +
+      "and the cap") {
     val nums = spark.range(1, 6).select(col("id").as("v"))
     var steps = 0
     val ex = intercept[IllegalStateException] {
