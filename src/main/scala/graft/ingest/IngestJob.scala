@@ -1,7 +1,11 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.embed.{Embedder, HashEmbedder}
 import graft.functions.{chunk_document, hash_embed, normalize_text}
@@ -19,11 +23,15 @@ import graft.store.VectorStore
  * vectors/documents/chunk_doc_map parquet (S11, S14) + index_metadata.json
  * }}}
  *
- * Everything before the write is per-row/per-partition — no shuffle except
- * the final range-partitioning of the vectors table — so the plan scales by
- * adding executors (SURVEY §7.4.6). Worker subprocesses, pickle IRs, retry
- * and checkpoint machinery (C1-C3) are replaced by Spark task scheduling,
- * lineage and task retries.
+ * Batch [[run]] and [[graft.streaming.StreamingIngest]] write the store
+ * through one [[sink]]: each file decodes once, each chunk embeds once,
+ * and every count is read off the jobs that write — no job only counts,
+ * and nothing reads the store back. Everything before the write is
+ * per-row/per-partition — no shuffle except the range-partitioning of
+ * the vectors table — so the plan scales by adding executors (SURVEY
+ * §7.4.6). Worker subprocesses, pickle IRs, retry and checkpoint
+ * machinery (C1-C3) are replaced by Spark task scheduling, lineage and
+ * task retries.
  */
 object IngestJob {
 
@@ -46,23 +54,27 @@ object IngestJob {
 
   /** A7 pipeline counters (`stage_split.py:82-88`, `vector_db_creator.py:
     * 397,438`): matched files, successfully extracted documents, chunks
-    * written, and files skipped (undecodable or blank) — the reference's
-    * skip-and-count contract (§4.1.3). */
+    * written, files skipped (matched but undecodable or blank) — the
+    * reference's skip-and-count contract (§4.1.3) — and files of an
+    * unsupported extension. */
   final case class Result(
       documents: Long,
       chunks: Long,
-      filesMatched: Long = -1,
-      filesSkipped: Long = -1)
+      filesMatched: Long,
+      filesSkipped: Long,
+      filesUnsupported: Long)
 
   /** The reference's 12 supported formats (`constants.py:112-115`). ALL
     * twelve extract for real, pure-JVM: PDF via [[PdfText]], `.msg` via
     * the OLE2/CFB reader ([[Ole2]]), legacy `.xls` via BIFF8
     * ([[XlsBiff]]). Remaining skip-and-count cases are encrypted PDFs and
     * (pre-round-3) CID-font pages — see [[PdfText]]'s scope note. */
-  private val supportedText = Seq(".txt", ".md")
-  private val supportedCsv = Seq(".csv")
-  private val supportedRich = Seq(".pdf", ".docx", ".eml", ".msg",
-    ".xls", ".xlsx", ".xlsm", ".rtf", ".html", ".htm")
+  private val Supported = Seq(".txt", ".md", ".csv", ".pdf", ".docx", ".eml",
+    ".msg", ".xls", ".xlsx", ".xlsm", ".rtf", ".html", ".htm")
+  /** A `binaryFile` row's lower-cased extension, and whether it is one of
+    * the twelve (F1). */
+  private val extension = lower(regexp_extract(col("path"), "(\\.[^./\\\\]+)$", 1))
+  private val supported: Column = extension.isin(Supported: _*)
 
   /** Extract the text-family formats from a directory into a documents
     * DataFrame `(text, file_path, file_type, file_name, creation_date,
@@ -109,7 +121,6 @@ object IngestJob {
       maxTotalBytes: Long = 512L << 20,
       maxMembers: Int = 4096,
       dropCounter: org.apache.spark.util.LongAccumulator = null): DataFrame = {
-    val memberExts = supportedText ++ supportedCsv ++ supportedRich
     val unpack = udf((path: String, b: Array[Byte]) => {
       // guard state shared across this one archive's walk
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
@@ -121,7 +132,7 @@ object IngestJob {
           case -1 => ""
           case i  => name.substring(i).toLowerCase(java.util.Locale.ROOT)
         }
-        memberExts.contains(ext)
+        Supported.contains(ext)
       }
       // drain up to the caps from an entry stream; None = guard tripped
       def readCapped(in: java.io.InputStream): Option[Array[Byte]] = {
@@ -419,9 +430,7 @@ object IngestJob {
       }
     })
 
-    val bin = binary
-      .withColumn("ext", lower(regexp_extract(col("path"), "(\\.[^./\\\\]+)$", 1)))
-      .filter(col("ext").isin(supportedText ++ supportedCsv ++ supportedRich: _*)) // F1
+    val bin = binary.withColumn("ext", extension).filter(supported) // F1
 
     bin.select(
       decodeAny(col("ext"), col("content")).as("text"),
@@ -501,37 +510,94 @@ object IngestJob {
       .select("id", "vector", "text", "metadata")
   }
 
-  /** Full create pipeline: extract → vectorize → persist + catalog. */
+  /** Where [[sink]] writes. Each mode has its caller; neither is a user
+    * option. */
+  private[graft] sealed trait Mode
+  /** [[run]]: every table is replaced, and the vectors take the FLAT
+    * layout, range-partitioned by id. */
+  private[graft] case object Overwrite extends Mode
+  /** A streaming micro-batch joins a store of `vectorsBefore` vectors:
+    * its vectors land in their cluster directories when the store has
+    * fixed IVF `centroids`, and link into its graph when it has an HNSW
+    * one. */
+  private[graft] final case class Append(vectorsBefore: Long,
+      centroids: Option[Seq[(Int, Seq[Float])]], hnsw: Boolean) extends Mode
+
+  /** The write end of the create pipeline, shared by [[run]] and
+    * [[graft.streaming.StreamingIngest]]: decode a `binaryFile`-shaped
+    * frame, vectorize it, and write `chunk_doc_map`, `documents`,
+    * `vectors` and `index_metadata.json`. The decoded documents and the
+    * vectors are persisted, and the first write's one job fills both
+    * caches, so each file decodes once and each chunk embeds once however
+    * many writes read them (the documents, the range sample, the vectors,
+    * the graph link). Every count is observed on a job that writes:
+    * matched and unsupported files on the scan and chunks on the
+    * vectorized frame, both under their caches, and documents on the
+    * `documents` write. */
+  private[graft] def sink(binary: DataFrame, store: VectorStore, db: String,
+      cfg: Config, mode: Mode): Result = {
+    val files, chunks, documents = Observation()
+    val docs = decodeAndProject(binary.observe(files,
+        count(when(supported, 1)).as("matched"),
+        count(when(!supported, 1)).as("unsupported")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val vectors = vectorize(docs, cfg)
+      .observe(chunks, count(lit(1)).as("chunks"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dir = store.dbDir(db)
+    val (save, before, indexType) = mode match {
+      case Overwrite => ("overwrite", 0L, "FLAT")
+      case a: Append =>
+        ("append", a.vectorsBefore, if (a.centroids.isDefined) "IVF" else "FLAT")
+    }
+    try {
+      // S14: chunk→doc-hash map + per-document metadata
+      // (sqlite_operations.py:12-27) as parquet
+      vectors.select(col("id").as("chunk_id"), col("metadata.hash").as("hash"))
+        .write.mode(save).parquet(s"$dir/chunk_doc_map")
+      docs.select(col("file_name"), col("hash"), col("file_path"),
+          col("text").as("page_content"))
+        .observe(documents, count(lit(1)).as("documents"))
+        .write.mode(save).parquet(s"$dir/documents")
+      mode match {
+        case Overwrite => store.writeVectors(db, vectors)
+        case Append(_, centroids, hnsw) =>
+          centroids.fold(vectors.write)(c => graft.ops.Ivf.assignClusters(
+              vectors, col("id"), col("vector"), c).write.partitionBy("cluster"))
+            .mode(save).option("maxRecordsPerFile", 100000)
+            .parquet(s"$dir/vectors")
+          // after the vectors write: the link reads the table it joins
+          if (hnsw) store.appendHnsw(db, vectors.select(col("id"), col("vector")))
+      }
+    } finally { vectors.unpersist(); docs.unpersist() }
+    val f = observed(files)
+    val nDocs = observed(documents).getLong(0)
+    val res = Result(documents = nDocs, chunks = observed(chunks).getLong(0),
+      filesMatched = f.getLong(0), filesSkipped = f.getLong(0) - nDocs,
+      filesUnsupported = f.getLong(1))
+    store.writeIndexMetadata(db, IndexMetadata(
+      distance_metric = "cosine", dimensions = cfg.dim, vector_type = "float32",
+      index_type = indexType, num_vectors = before + res.chunks))
+    res
+  }
+
+  /** An observation's row. The listener bus delivers it after the job
+    * that computed it returns; one that never arrives fails loudly. */
+  private def observed(o: Observation): Row =
+    try Await.result(o.future, 2.minutes)
+    catch { case _: TimeoutException => throw new IllegalStateException(
+      s"IngestJob: the observed counts ${o.name} never arrived") }
+
+  /** Full create pipeline: one `binaryFile` scan of the folder into
+    * [[sink]] in overwrite mode — a fresh FLAT store, each file decoded
+    * once, each chunk embedded once, every count read off the writes —
+    * then the catalog entry. */
   def run(spark: SparkSession, docsDir: String, warehouse: String, db: String,
       cfg: Config = Config()): Result = {
     val store = new VectorStore(spark, warehouse)
-    val docs = extract(spark, docsDir)
-    docs.cache()
-    try {
-      val vectors = vectorize(docs, cfg)
-      store.writeVectors(db, vectors)
-
-      // S14: per-document metadata + chunk→doc-hash map
-      // (sqlite_operations.py:12-27) as parquet
-      store.writeDocuments(db,
-        docs.select(col("file_name"), col("hash"), col("file_path"),
-          col("text").as("page_content")))
-      val written = store.vectors(db)
-      store.writeChunkDocMap(db,
-        written.select(col("id").as("chunk_id"), col("metadata.hash").as("hash")))
-
-      val nVec = written.count()
-      store.writeIndexMetadata(db, IndexMetadata(
-        distance_metric = "cosine", dimensions = cfg.dim,
-        vector_type = "float32", index_type = "FLAT", num_vectors = nVec))
-      store.catalogAdd(db, DatabaseInfo(cfg.model, cfg.chunkSize, cfg.chunkOverlap))
-      val nDocs = docs.count()
-      val matched = spark.read.format("binaryFile").load(docsDir)
-        .select(lower(regexp_extract(col("path"), "(\\.[^./\\\\]+)$", 1)).as("ext"))
-        .filter(col("ext").isin(supportedText ++ supportedCsv ++ supportedRich: _*))
-        .count()
-      Result(documents = nDocs, chunks = nVec,
-        filesMatched = matched, filesSkipped = matched - nDocs)
-    } finally docs.unpersist()
+    val res = sink(spark.read.format("binaryFile").load(docsDir), store, db,
+      cfg, Overwrite)
+    store.catalogAdd(db, DatabaseInfo(cfg.model, cfg.chunkSize, cfg.chunkOverlap))
+    res
   }
 }

@@ -267,12 +267,6 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
         rows.map { case (_, cid, c) => (cid, c) }.sortBy(_._1).toSeq
       }
 
-  def writeDocuments(db: String, documents: DataFrame): Unit =
-    documents.write.mode("overwrite").parquet(s"${dbDir(db)}/documents")
-
-  def writeChunkDocMap(db: String, map: DataFrame): Unit =
-    map.write.mode("overwrite").parquet(s"${dbDir(db)}/chunk_doc_map")
-
   /** Build and persist a [[graft.ops.ScrubArtifact]]'s frozen-corpus table
     * under `<db>/artifacts/<kind>` — run once per corpus freeze; every
     * later batch gates against the parquet with zero recomputation. */
@@ -334,6 +328,20 @@ final class VectorStore(spark: SparkSession, warehouse: String) {
   def vectors(db: String): DataFrame = spark.read.parquet(s"${dbDir(db)}/vectors")
   def documents(db: String): DataFrame = spark.read.parquet(s"${dbDir(db)}/documents")
   def chunkDocMap(db: String): DataFrame = spark.read.parquet(s"${dbDir(db)}/chunk_doc_map")
+
+  /** Whether the store has written `table` (a side table decides a
+    * layout: `centroids` IVF, `hnsw_meta` HNSW). A driver-side check, no
+    * Spark job; reading a table that exists but is unreadable fails. */
+  def hasTable(db: String, table: String): Boolean =
+    Files.isDirectory(Paths.get(s"${dbDir(db)}/$table"))
+
+  /** The vector count: `index_metadata.json`'s when the store has one,
+    * else a count of a vectors table written without it, else 0. */
+  def numVectors(db: String): Long =
+    if (Files.exists(Paths.get(s"${dbDir(db)}/index_metadata.json")))
+      indexMetadata(db).num_vectors
+    else if (hasTable(db, "vectors")) vectors(db).count()
+    else 0L
 
   def indexMetadata(db: String): IndexMetadata = {
     val row = spark.read.json(s"${dbDir(db)}/index_metadata.json").collect()(0)

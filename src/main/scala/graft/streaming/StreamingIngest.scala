@@ -6,17 +6,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.ingest.IngestJob
-import graft.model.IndexMetadata
 import graft.store.VectorStore
 
 /**
  * Incremental ingest (SURVEY §1.1 "Stream" extension point): a Structured
- * Streaming file source watches the docs directory and runs the SAME
- * per-row operators as the batch pipeline — decode → chunk → normalize →
- * embed are all stateless, so the lineage is reused verbatim
- * (`IngestJob.decodeAndProject` / `IngestJob.vectorize`). Each micro-batch
- * appends to the vectors table through `foreachBatch`, keeping the
- * [[VectorStore]] layout and `index_metadata.json` count consistent.
+ * Streaming file source watches the docs directory, and each micro-batch
+ * of new files goes through the SAME write end as the batch pipeline —
+ * [[IngestJob.sink]] in append mode — so decode → chunk → normalize →
+ * embed, the table writes and the counts are the batch ones verbatim.
+ * The store keeps its layout: fixed-centroid IVF assignment when it has
+ * centroids, incremental HNSW linking when it has a graph, and an
+ * `index_metadata.json` count advanced by each batch's chunks.
  *
  * The reference has no streaming (its 500 ms GUI timer is UI polling,
  * SURVEY §1.1); its checkpoint/resume machinery (C2) maps to the streaming
@@ -36,25 +36,27 @@ object StreamingIngest {
       trigger: Trigger = Trigger.AvailableNow(),
       dedupeWatermark: Option[String] = Some("10 minutes")): StreamingQuery = {
     val store = new VectorStore(spark, warehouse)
-    // streaming IVF maintenance: a store created with learned centroids
-    // ([[VectorStore.writeVectorsIvf]]) keeps its cluster-partitioned
-    // layout fresh — each batch's vectors are assigned row-locally against
-    // the FIXED centroids (no retraining, no shuffle beyond the partition
-    // write) and appended under their cluster directories, so
-    // an [[graft.query.Searcher.Ivf]] search's directory pruning stays valid
-    // as data streams in. Re-cluster by re-running writeVectorsIvf when
-    // drift warrants it.
-    val ivfCentroids: Option[Seq[(Int, Seq[Float])]] =
-      try { val c = store.centroids(db); if (c.nonEmpty) Some(c) else None }
-      catch { case _: Exception => None }
-    // streaming HNSW maintenance: a store with a persisted layered graph
-    // ([[VectorStore.writeHnsw]]) links each batch's vectors into it
-    // incrementally ([[VectorStore.appendHnsw]] — shared beam descent +
-    // integer re-cap, no re-scoring), so an [[graft.query.Searcher.Hnsw]]
-    // search stays current as data
-    // streams in without a per-batch graph rebuild.
-    val hnswStore: Boolean =
-      try { store.hnswMeta(db); true } catch { case _: Exception => false }
+    // The layout follows the side tables the store has; one that exists
+    // but cannot be read fails here, before any batch appends (FLAT files
+    // appended to an IVF store would escape its cluster pruning).
+    // IVF: each batch is assigned row-locally against the FIXED centroids
+    // (no retraining) and appended under its cluster directories, so an
+    // [[graft.query.Searcher.Ivf]] search's pruning stays valid; re-cluster
+    // by re-running writeVectorsIvf when drift warrants it. HNSW: each
+    // batch links into the persisted graph ([[VectorStore.appendHnsw]]),
+    // so a [[graft.query.Searcher.Hnsw]] search stays current without a
+    // rebuild.
+    val centroids = Option.when(store.hasTable(db, "centroids"))(store.centroids(db))
+      .filter(_.nonEmpty)
+    val hnsw = store.hasTable(db, "hnsw_meta")
+    if (hnsw) store.hnswMeta(db)
+    // The vector count is read once per query, then advanced by each
+    // batch's own chunk count — never a per-batch recount of the table.
+    // It shares foreachBatch's at-least-once semantics (a retried,
+    // partially written batch appends twice); `compactVectors` or a
+    // manual recount re-baselines.
+    var mode = IngestJob.Append(store.numVectors(db), centroids, hnsw)
+
     val binary = spark.readStream.format("binaryFile")
       .schema(binarySchema)
       .load(docsDir)
@@ -71,61 +73,14 @@ object StreamingIngest {
         .dropDuplicatesWithinWatermark("content_hash")
         .drop("content_hash")
     }
-    val docs = IngestJob.decodeAndProject(src)
 
-    // Running vector count for index_metadata.json: initialized ONCE per
-    // query (existing metadata, falling back to a one-time table count for
-    // a pre-metadata store), then advanced by each batch's own chunk count.
-    // Round 2 recounted the ENTIRE vectors table every micro-batch — at
-    // 100 TB with frequent triggers that is a per-batch O(table) listing +
-    // footer-read stall on the driver. Counts share foreachBatch's
-    // at-least-once semantics either way (a retried partially-written
-    // batch double-appends rows under both schemes); `compactVectors` or
-    // a manual recount re-baselines.
-    var numVectors = -1L
-
-    docs.writeStream
+    src.writeStream
       .option("checkpointLocation", s"${store.dbDir(db)}/_ingest_checkpoint")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          if (numVectors < 0) numVectors =
-            try store.indexMetadata(db).num_vectors
-            catch { case _: Exception =>
-              try store.vectors(db).count() catch { case _: Exception => 0L } }
-          // persist: the vectors lineage (decode → chunk → embed) feeds the
-          // count and BOTH table writes — one evaluation, not three
-          val vectors = IngestJob.vectorize(batch, cfg)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val nNew = vectors.count()
-            ivfCentroids match {
-              case Some(cents) =>
-                graft.ops.Ivf.assignClusters(vectors, col("id"), col("vector"),
-                    cents)
-                  .write.mode("append")
-                  .option("maxRecordsPerFile", 100000)
-                  .partitionBy("cluster")
-                  .parquet(s"${store.dbDir(db)}/vectors")
-              case None =>
-                vectors.write.mode("append")
-                  .option("maxRecordsPerFile", 100000)
-                  .parquet(s"${store.dbDir(db)}/vectors")
-            }
-            if (hnswStore)
-              store.appendHnsw(db, vectors.select(col("id"), col("vector")))
-            batch.select(col("file_name"), col("hash"), col("file_path"),
-              col("text").as("page_content"))
-              .write.mode("append").parquet(s"${store.dbDir(db)}/documents")
-            vectors.select(col("id").as("chunk_id"), col("metadata.hash").as("hash"))
-              .write.mode("append").parquet(s"${store.dbDir(db)}/chunk_doc_map")
-            numVectors += nNew
-            store.writeIndexMetadata(db, IndexMetadata(
-              distance_metric = "cosine", dimensions = cfg.dim,
-              vector_type = "float32",
-              index_type = if (ivfCentroids.isDefined) "IVF" else "FLAT",
-              num_vectors = numVectors))
-          } finally vectors.unpersist(blocking = false)
+          val res = IngestJob.sink(batch, store, db, cfg, mode)
+          mode = mode.copy(vectorsBefore = mode.vectorsBefore + res.chunks)
         }
       }
       .start()

@@ -145,6 +145,7 @@ class SparkSemanticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // F1: `.xyz` never matches; F2/A7: the blank file matches, is dropped
     // and counted
     assert(res.filesMatched == 2 && res.filesSkipped == 1 && res.documents == 1)
+    assert(res.filesUnsupported == 1) // skipme.xyz is counted, not lost
     val docs = store.documents("sinkdb").collect()
     assert(docs.length == 1 && docs.head.getAs[String]("file_name") == "notes.txt")
     val map = store.chunkDocMap("sinkdb").collect()

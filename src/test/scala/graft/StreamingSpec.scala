@@ -123,6 +123,32 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hits.count() > 0)
   }
 
+  test("streaming IVF store whose centroids cannot be read: the ingest " +
+      "fails and appends nothing") {
+    val work = Files.createTempDirectory("graft-sivfbad").toString
+    val docsDir = s"$work/docs"
+    Files.createDirectories(Paths.get(docsDir))
+    def put(name: String, content: String): Unit =
+      Files.write(Paths.get(docsDir, name), content.getBytes(StandardCharsets.UTF_8))
+    val store = new VectorStore(spark, s"$work/wh")
+    val cfg = IngestJob.Config(chunkSize = 100, chunkOverlap = 0)
+    put("seed.txt", "the initial corpus trains the coarse cells " * 20)
+    val seed = IngestJob.vectorize(IngestJob.extract(spark, docsDir), cfg)
+    store.writeVectorsIvf("ivfbad", seed, nlist = 4, iters = 1)
+    val before = store.vectors("ivfbad").count()
+    Files.write(Paths.get(s"$work/wh/ivfbad/centroids/part-99999-garbage.parquet"),
+      "not a parquet file".getBytes(StandardCharsets.UTF_8))
+
+    put("later.txt", "a streamed document joins the clustered index " * 20)
+    intercept[Exception] {
+      StreamingIngest.start(spark, docsDir, s"$work/wh", "ivfbad", cfg)
+        .awaitTermination(60000)
+    }
+    assert(store.vectors("ivfbad").count() == before)
+    assert(!store.hasTable("ivfbad", "documents"))
+    assert(!Files.exists(Paths.get(s"$work/wh/ivfbad/index_metadata.json")))
+  }
+
   test("streaming HNSW maintenance: appended batches are searchable " +
       "without a graph rebuild") {
     val work = Files.createTempDirectory("graft-shnsw").toString
